@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,9 +31,11 @@ import org.apache.spark.sql.types._
   *  - O14 page-cursor checkpoint + max(1,·) floor
   *        (fetch_articles_backfill.py:36-44)           → loadBackfillCursor
   *
-  * All driver-side state (watermark, cursor) stays in 1-row DataFrames and
-  * reaches the data plan via broadcast joins — no collect in any data path,
-  * so the same plan runs unchanged on a 1000-executor cluster.
+  * The watermark stays a 1-row DataFrame and reaches the data plan via a
+  * broadcast join — no collect in that data path. The backfill cursor is
+  * control state, resolved on the driver like the reference's blob read
+  * (fetch_articles_backfill.py:36-44): it reaches the plan as int page
+  * bounds that the article source prunes before planning (O11).
   */
 object ArticlePipeline {
 
@@ -116,20 +120,37 @@ object ArticlePipeline {
   def loadBackfillCursor(spark: SparkSession): DataFrame =
     loadBackfillCursorFrom(spark, s"$fixturesDir/checkpoints/backfill_page.json")
 
+  /** The tiny blob is parsed on the driver into a local 1-row DataFrame,
+    * so reading the cursor back launches no Spark job. A missing file, a
+    * null or non-integer `page`, or a malformed body gives 1. */
   def loadBackfillCursorFrom(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    if (!new java.io.File(path).exists()) Seq(1L).toDF("cursor")
-    else spark.read
-      .schema(StructType(Seq(StructField("page", LongType))))
-      .json(path)
-      .select(greatest(coalesce(col("page"), lit(1L)), lit(1L)).as("cursor"))
+    val file = new java.io.File(path)
+    val page =
+      if (!file.exists()) None
+      else try Some(new ObjectMapper().readTree(file).path("page"))
+        .filter(n => n.isIntegralNumber && n.canConvertToLong).map(_.asLong)
+      catch { case _: JsonProcessingException => None }
+    Seq(page.fold(1L)(_ max 1L)).toDF("cursor")
   }
 
   /** O11: admit only maxPages pages starting at the cursor — the bounded
-    * micro-batch that kept the reference inside its 10-minute window. */
-  def boundedPages(pages: DataFrame, cursor: DataFrame, maxPages: Int): DataFrame =
-    pages.crossJoin(broadcast(cursor))
-      .filter(col("page") >= col("cursor") && col("page") < col("cursor") + maxPages)
+    * micro-batch that kept the reference inside its 10-minute window. The
+    * 1-row cursor is collected on the driver (free for the local relation
+    * loadBackfillCursorFrom returns) and the window becomes int literals
+    * on `page`, which ArticleSource prunes at planning and file sources
+    * prune as a partition filter. A null or absent cursor, or a window
+    * outside the int range, admits nothing. */
+  def boundedPages(pages: DataFrame, cursor: DataFrame, maxPages: Int): DataFrame = {
+    val from = cursor.select(col("cursor").cast(LongType)).collect()
+      .headOption.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    val window = from.filter(c => maxPages > 0 && c <= Int.MaxValue)
+      .map(c => (c max Int.MinValue, (c + maxPages - 1) min Int.MaxValue))
+      .filter { case (lo, hi) => lo <= hi }
+    pages.filter(window.fold(lit(false)) { case (lo, hi) =>
+      col("page").between(lo.toInt, hi.toInt)
+    })
+  }
 
   /** O12: true hive date partitioning (the reference merely mimics it with
     * `/` in flat blob names, fetch_articles.py:124-126). */

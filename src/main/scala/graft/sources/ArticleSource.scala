@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{Filter, GreaterThan}
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,14 +47,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    parsed row. The feed order is the reference's contract; sequential
   *    consumption is inherent to early termination, and the row volume in
   *    this mode is the small "new since watermark" delta by construction.
+  *  - in both modes, integer comparisons on `page` (`>`, `>=`, `<`, `<=`,
+  *    `=`) narrow one inclusive page range, and planning drops every page
+  *    file outside it: a backfill window (O11, boundedPages) plans and
+  *    parses only its own pages, the reference's maxPages fetch.
   *
   * A page dir may hold several chunk files (the reference appends a new
   * `page=N_<timestamp>.json` blob per run, fetch_articles.py:127) — all
   * are read, in (page, file-name) order.
   *
-  * The pushed filter stays a residual (Spark re-applies it), so the stop
-  * is purely an optimization — malformed rows pass through to the engine,
-  * which drops them exactly like the PERMISSIVE path (O6).
+  * The pushed watermark filter stays a residual (Spark re-applies it), so
+  * the stop is purely an optimization — malformed rows pass through to the
+  * engine, which drops them exactly like the PERMISSIVE path (O6). The page
+  * range is exact (`page` is constant within a partition), so page filters
+  * are not residual: per-window literals never reach generated code.
   */
 class ArticleSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -85,23 +91,49 @@ object ArticleSource {
   def parseIso(v: String): Option[java.time.Instant] =
     try Some(java.time.Instant.parse(v)) catch { case _: Exception => None }
 
-  /** All page chunk files under the source path, ordered by (page N
-    * ascending, file name ascending). Each `page=N` dir may hold several
-    * chunk files — successive incremental batches in the reference's
-    * layout — and all of them are data. */
-  def pageFiles(path: String): Seq[(Int, java.io.File)] = {
+  /** All page chunk files under the source path with page N in `pages`,
+    * ordered by (page N ascending, file name ascending). Each `page=N` dir
+    * may hold several chunk files — successive incremental batches in the
+    * reference's layout — and all of them are data. A `page=` dir whose N
+    * is not an int fails planning, naming the dir. */
+  def pageFiles(path: String, pages: PageRange = PageRange.All): Seq[(Int, java.io.File)] = {
     val base = new java.io.File(path)
     val entries = Option(base.listFiles()).getOrElse(
       throw new IllegalArgumentException(
         s"article source path is not a readable directory: $path"))
     entries.toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("page="))
-      .flatMap { dir =>
-        val page = dir.getName.stripPrefix("page=").toInt
+      .map { dir =>
+        val page = dir.getName.stripPrefix("page=").toIntOption.getOrElse(
+          throw new IllegalArgumentException(s"article page dir is not page=<int>: $dir"))
+        page -> dir
+      }
+      .filter { case (page, _) => pages.contains(page) }
+      .flatMap { case (page, dir) =>
         Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-          .filter(_.isFile).sortBy(_.getName).map(page -> _)
+          .filter(_.isFile).map(page -> _)
       }
       .sortBy { case (p, f) => (p, f.getName) }
+  }
+}
+
+/** Inclusive page bounds narrowed by pushed `page` comparisons. Long, so
+  * `page > Int.MaxValue` and `page < Int.MinValue` are empty, not wrapped. */
+case class PageRange(lo: Long, hi: Long) {
+  def contains(page: Int): Boolean = lo <= page && page <= hi
+  override def toString: String = if (this == PageRange.All) "all" else s"[$lo,$hi]"
+}
+
+object PageRange {
+  val All: PageRange = PageRange(Int.MinValue, Int.MaxValue)
+
+  /** The pushable filters: an int comparison on `page` and how it narrows a range. */
+  val narrow: PartialFunction[Filter, PageRange => PageRange] = {
+    case GreaterThan("page", v: Int) => r => r.copy(lo = r.lo max (v + 1L))
+    case GreaterThanOrEqual("page", v: Int) => r => r.copy(lo = r.lo max v)
+    case LessThan("page", v: Int) => r => r.copy(hi = r.hi min (v - 1L))
+    case LessThanOrEqual("page", v: Int) => r => r.copy(hi = r.hi min v)
+    case EqualTo("page", v: Int) => r => PageRange(r.lo max v, r.hi min v)
   }
 }
 
@@ -128,37 +160,41 @@ class ArticleTable(path: String) extends Table with SupportsRead {
 class ArticleScanBuilder(path: String, conf: ArticleReadConf)
     extends ScanBuilder with SupportsPushDownFilters {
   private var watermark: Option[String] = None
+  private var pages = PageRange.All
   private var pushed: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // Accept `published_at > <literal>` as the scan-stop watermark; every
-    // filter (including the accepted one) remains residual — the source
-    // may emit rows below the watermark (the stale row that triggered the
-    // stop, malformed rows) and the engine finishes the job.
-    pushed = filters.collect {
+    // Integer comparisons on `page` narrow the planned page range and are
+    // exact, so they are consumed. Accept `published_at > <literal>` as the
+    // scan-stop watermark; it and every other filter remain residual — the
+    // source may emit rows below the watermark (the stale row that
+    // triggered the stop, malformed rows) and the engine finishes the job.
+    val (pageFilters, residual) = filters.partition(PageRange.narrow.isDefinedAt)
+    pages = pageFilters.foldLeft(PageRange.All)((r, f) => PageRange.narrow(f)(r))
+    pushed = pageFilters ++ residual.collect {
       case f @ GreaterThan("published_at", v: String) =>
         watermark = Some(v); f
     }
-    filters
+    residual
   }
   override def pushedFilters(): Array[Filter] = pushed
-  override def build(): Scan = new ArticleScan(path, watermark, conf)
+  override def build(): Scan = new ArticleScan(path, watermark, pages, conf)
 }
 
-class ArticleScan(path: String, watermark: Option[String], conf: ArticleReadConf)
-    extends Scan with Batch {
+class ArticleScan(path: String, watermark: Option[String], pages: PageRange,
+    conf: ArticleReadConf) extends Scan with Batch {
   override def readSchema(): StructType = ArticleSource.schema
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String) =
     new ArticleMicroBatchStream(path, conf)
   override def description(): String =
-    s"ArticleScan(watermarkStop=${watermark.getOrElse("none")})"
+    s"ArticleScan(watermarkStop=${watermark.getOrElse("none")}, pages=$pages)"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val pages = ArticleSource.pageFiles(path)
+    val files = ArticleSource.pageFiles(path, pages).map { case (p, f) => (p, f.getPath) }
     watermark match {
-      case Some(_) => Array(ArticlePartition(pages.map { case (p, f) => (p, f.getPath) }))
-      case None => pages.map { case (p, f) => ArticlePartition(Seq((p, f.getPath))) }.toArray
+      case Some(_) => Array(ArticlePartition(files))
+      case None => files.map(pf => ArticlePartition(Seq(pf))).toArray
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =

@@ -65,11 +65,41 @@ class IngestPipelineSpec extends AnyFunSuite {
   }
 
   test("null page in the checkpoint blob also floors to 1") {
+    assert(cursorFrom("""{"page": null}""") == 1L)
+  }
+
+  private def cursorFile(body: String): String = {
     val p = java.nio.file.Files.createTempFile("graft_cursor_", ".json")
-    java.nio.file.Files.writeString(p, """{"page": null}""")
-    val cursor = ArticlePipeline.loadBackfillCursorFrom(s, p.toString)
-      .collect().head.getLong(0)
-    assert(cursor == 1L)
+    java.nio.file.Files.writeString(p, body).toString
+  }
+
+  private def cursorFrom(body: String): Long =
+    ArticlePipeline.loadBackfillCursorFrom(s, cursorFile(body)).collect().head.getLong(0)
+
+  test("cursor blob: max(1, page) floor; a malformed body also gives 1") {
+    assert(cursorFrom("""{"page": 0}""") == 1L)
+    assert(cursorFrom("""{"page": -4}""") == 1L)
+    assert(cursorFrom("""{"page": 7}""") == 7L)
+    assert(cursorFrom("""{"page": "seven"}""") == 1L, "non-numeric page")
+    assert(cursorFrom("""{"page": 7""") == 1L, "malformed body")
+  }
+
+  private def v2Window(cursorBody: String, maxPages: Int) = {
+    val pages = s.read.format("graft.sources.ArticleSourceProvider")
+      .option("path", s"${ArticlePipeline.fixturesDir}/articles").load()
+    graft.sources.ArticleSource.pagesParsed.set(0)
+    val got = ArticlePipeline.boundedPages(
+      pages, ArticlePipeline.loadBackfillCursorFrom(s, cursorFile(cursorBody)), maxPages)
+      .select("page").distinct().collect().map(_.getInt(0)).sorted.toSeq
+    (got, graft.sources.ArticleSource.pagesParsed.get)
+  }
+
+  test("bounded window over the V2 source parses exactly maxPages pages") {
+    assert(v2Window("""{"page": 2}""", 3) == (Seq(2, 3, 4), 3L))
+  }
+
+  test("a cursor past the last page gives an empty window; no page is parsed") {
+    assert(v2Window("""{"page": 100}""", 3) == (Seq.empty, 0L))
   }
 
   test("bounded micro-batch admits exactly maxPages pages from the cursor") {

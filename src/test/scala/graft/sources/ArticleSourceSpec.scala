@@ -43,6 +43,54 @@ class ArticleSourceSpec extends AnyFunSuite {
       "watermarkStop=2025-06-01T12:00:00Z"))
   }
 
+  // ---- O11: page-range pushdown ----
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("id", "published_at", "title", "page").collect()
+      .map(r => (r.get(0), r.get(1), r.get(2), r.getInt(3))).toSet
+
+  test("page range prunes planning: only the range's pages are parsed, same rows") {
+    val all = rows(v2).filter { case (_, _, _, p) => p >= 2 && p < 4 }
+    val ranged = v2.filter(col("page") >= 2 && col("page") < 4)
+    assert(ranged.rdd.getNumPartitions == 2, "one partition per page in [2,3]")
+    ArticleSource.pagesParsed.set(0)
+    assert(rows(ranged) == all, "pruning is exact: the unpruned scan filtered afterwards")
+    assert(ArticleSource.pagesParsed.get == 2)
+  }
+
+  test("page range composes with the watermark stop") {
+    val wm = col("published_at") > lit("2025-06-01T12:00:00Z")
+    val all = rows(v2.filter(wm)).filter(_._4 >= 2)
+    val ranged = v2.filter(wm && col("page") >= 2)
+    assert(ranged.rdd.getNumPartitions == 1, "the watermark walk stays one partition")
+    ArticleSource.pagesParsed.set(0)
+    assert(rows(ranged) == all)
+    assert(ArticleSource.pagesParsed.get == 3,
+      "pages 2-4 parsed (stop on page 4); page 1 pruned, 5 and 6 skipped")
+  }
+
+  test("page bounds at the int limits are empty, not wrapped") {
+    ArticleSource.pagesParsed.set(0)
+    assert(v2.filter(col("page") > Int.MaxValue).collect().isEmpty)
+    assert(v2.filter(col("page") < Int.MinValue).collect().isEmpty)
+    assert(ArticleSource.pagesParsed.get == 0)
+    assert(v2.filter(col("page") <= Int.MaxValue).count() == 28)
+  }
+
+  test("an OR over page is not pushed, and the result is still correct") {
+    val all = rows(v2).filter(r => r._4 == 1 || r._4 == 5)
+    val either = v2.filter(col("page") === 1 || col("page") === 5)
+    assert(either.queryExecution.executedPlan.toString.contains("pages=all"))
+    ArticleSource.pagesParsed.set(0)
+    assert(rows(either) == all)
+    assert(ArticleSource.pagesParsed.get == 6)
+  }
+
+  test("scan description advertises the pushed page range") {
+    val ranged = v2.filter(col("page") >= 2 && col("page") < 4)
+    assert(ranged.queryExecution.executedPlan.toString.contains("pages=[2,3]"))
+  }
+
   // ---- O2/O3: retry, backoff, exhaustion, throttle, multi-chunk pages ----
 
   private def withFault[A](fault: (String, Int) => Unit)(body: => A): A =
@@ -124,6 +172,13 @@ class ArticleSourceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       ArticleSource.pageFiles("/root/repo/fixtures/does_not_exist")
     }
+  }
+
+  test("pageFiles fails loudly, naming the dir, on a non-integer page dir") {
+    val dir = java.nio.file.Files.createTempDirectory("articles_badpage").toFile
+    new java.io.File(dir, "page=abc").mkdirs()
+    val e = intercept[IllegalArgumentException](ArticleSource.pageFiles(dir.getPath))
+    assert(e.getMessage.contains("page=abc"))
   }
 
   test("O13/O14 streaming: page-cursor offset commits atomically; restart reads nothing new") {
