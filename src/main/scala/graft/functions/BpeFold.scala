@@ -48,7 +48,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    passes stay sequential in rank order — same as the fold.
   *
   * The merges array is identical for every row (a broadcast scalar);
-  * compiled patterns are memoized per ArrayData reference. */
+  * compiled patterns are memoized by its content, not its reference (the
+  * input row's buffer may be reused, so an identity check is not safe).
+  * A merge that is null or not exactly two code points fails compilation,
+  * naming the element. */
 case class BpeFold(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
 
@@ -71,7 +74,11 @@ case class BpeFold(left: Expression, right: Expression)
     val rs = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) {
-      val m = merges.getUTF8String(i).getBytes
+      val merge = if (merges.isNullAt(i)) null else merges.getUTF8String(i)
+      require(merge != null && merge.numChars == 2,
+        s"graft_bpe_fold: merge $i must be exactly 2 code points, got " +
+          (if (merge == null) "null" else s"'$merge'"))
+      val m = merge.getBytes
       val cut = UTF8String.numBytesForFirstByte(m(0))
       // pattern '|a|b|', replacement '|ab|'
       val p = new Array[Byte](m.length + 3)

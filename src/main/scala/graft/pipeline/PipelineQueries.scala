@@ -31,7 +31,10 @@ object PipelineQueries {
     * sub-16MB-per-partition regime where withCappedStateWidth and
     * ccLoop already floor at 8. Above ~sf2.5 the data term exceeds any
     * local core count and nothing changes (sf10 = 120, sf100 = 512 —
-    * every recorded ladder regime keeps its width). */
+    * every recorded ladder regime keeps its width). Unmeasured: the
+    * ≈sf0.5–2.5 mid-band on many-core hosts, where the width (8 up to
+    * ~30) sits below the core count; no recorded A/B covers it, and a
+    * 4-core host cannot measure it. */
   private def graphWidth(s: SparkSession, d: String): Int =
     math.min(512L,
       math.max(8L,

@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -32,16 +34,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - retryBaseMs (default 1000): backoff sleep is retryBaseMs·2^attempt,
   *    the reference's time.sleep(2**attempt) with a test-tunable unit.
   *  - throttleMs  (default 0): pause between successive page reads inside
-  *    one partition — the reference's SLEEP_DELAY rate limit. Only
-  *    meaningful for the sequential incremental walk (the API-facing
-  *    mode); backfill partitions hold a single chunk each.
+  *    one partition — the reference's SLEEP_DELAY rate limit. It paces the
+  *    sequential incremental walk (the API-facing mode) and, in backfill,
+  *    the run of contiguous chunks each partition reads; partitions still
+  *    read in parallel with one another.
   * A malformed page body (JSON parse error) is NOT retried — the
   * reference breaks out immediately on JSONDecodeError (fetch_articles
   * .py:73-76) — and likewise degrades to an empty page.
   *
   * Planning strategy mirrors the two reference modes:
-  *  - no watermark filter pushed (backfill): one InputPartition PER PAGE
-  *    CHUNK — chunks scan in parallel, like any file source;
+  *  - no watermark filter pushed (backfill): the chunk files are cut, in
+  *    (page, file-name) order, into contiguous runs of near-equal bytes —
+  *    about one partition per core, more only past
+  *    spark.sql.files.maxPartitionBytes, never more than one per file
+  *    ([[ArticleSource.packPartitions]]). Runs scan in parallel like any
+  *    file source's packed splits, but stay contiguous: pages are
+  *    time-ordered, so each task spans few dates and opens few sink files;
   *  - watermark filter pushed (incremental): ONE partition walking pages
   *    in ascending page order, stopping the whole scan at the first stale
   *    parsed row. The feed order is the reference's contract; sequential
@@ -114,6 +122,50 @@ object ArticleSource {
           .filter(_.isFile).map(page -> _)
       }
       .sortBy { case (p, f) => (p, f.getName) }
+  }
+
+  /** Parallel planning rule for page files (backfill scan and each
+    * streaming micro-batch): `files`, kept in order, cut by
+    * [[packContiguous]] into [[groupCount]] partitions. Parallelism is
+    * `spark.sql.leafNodeDefaultParallelism`, else the context's default
+    * parallelism; the byte cap is `spark.sql.files.maxPartitionBytes`. */
+  def packPartitions(files: Seq[(Int, java.io.File)]): Array[InputPartition] = {
+    val sizes = files.map(_._2.length)
+    val conf = SQLConf.get
+    val parallelism = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(SparkSession.active.sparkContext.defaultParallelism)
+    val groups = groupCount(files.length, sizes.sum, parallelism, conf.filesMaxPartitionBytes)
+    packContiguous(sizes, groups).map { r =>
+      ArticlePartition(files.slice(r.start, r.end).map { case (p, f) => (p, f.getPath) })
+    }.toArray
+  }
+
+  /** `min(files, max(parallelism, ceil(totalBytes / maxPartitionBytes)))`:
+    * about one partition per core, more only when that would exceed the
+    * byte cap, never more than one per file (0 files give 0). */
+  def groupCount(files: Int, totalBytes: Long, parallelism: Int, maxPartitionBytes: Long): Int = {
+    val byBytes = (totalBytes + maxPartitionBytes - 1) / maxPartitionBytes
+    math.min(files.toLong, math.max(parallelism.toLong, byBytes)).toInt
+  }
+
+  /** Cuts files of the given sizes, in order, into `groups` contiguous
+    * non-empty index ranges of near-equal bytes (`groups` is capped at the
+    * file count). Cut j falls on the prefix whose byte total is nearest
+    * j/groups of the whole, kept strictly after cut j-1 and early enough
+    * to leave one file per later group, so no group holds more than
+    * the mean plus the largest file. Contiguity, not size-sorting as in
+    * Spark's FilePartition: pages are time-ordered, so a contiguous group
+    * spans few publication dates and its sink task opens few files. */
+  def packContiguous(sizes: Seq[Long], groups: Int): Seq[Range] = {
+    val n = sizes.length
+    val k = math.min(groups, n)
+    if (k <= 0) return Seq.empty
+    val prefix = sizes.scanLeft(0L)(_ + _).toArray
+    val cuts = (1 until k).scanLeft(0) { (prev, j) =>
+      val target = prefix(n).toDouble * j / k
+      (prev + 1 to n - (k - j)).minBy(c => math.abs(prefix(c) - target))
+    } :+ n
+    cuts.zip(cuts.tail).map { case (a, b) => a until b }
   }
 }
 
@@ -191,10 +243,10 @@ class ArticleScan(path: String, watermark: Option[String], pages: PageRange,
     s"ArticleScan(watermarkStop=${watermark.getOrElse("none")}, pages=$pages)"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = ArticleSource.pageFiles(path, pages).map { case (p, f) => (p, f.getPath) }
+    val files = ArticleSource.pageFiles(path, pages)
     watermark match {
-      case Some(_) => Array(ArticlePartition(files))
-      case None => files.map(pf => ArticlePartition(Seq(pf))).toArray
+      case Some(_) => Array(ArticlePartition(files.map { case (p, f) => (p, f.getPath) }))
+      case None => ArticleSource.packPartitions(files)
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -211,8 +263,9 @@ class ArticleScan(path: String, watermark: Option[String], pages: PageRange,
   * rows — the reference's incremental-run contract, proven in
   * ArticleSourceSpec.
   *
-  * Each micro-batch covers the pages in (start, end]; per-page input
-  * partitions parallelize within the batch like the backfill scan. */
+  * Each micro-batch covers the pages in (start, end], planned into
+  * parallel partitions by the backfill scan's rule
+  * ([[ArticleSource.packPartitions]]). */
 class ArticleMicroBatchStream(path: String, conf: ArticleReadConf)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -233,10 +286,7 @@ class ArticleMicroBatchStream(path: String, conf: ArticleReadConf)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PageOffset].page
     val e = end.asInstanceOf[PageOffset].page
-    ArticleSource.pageFiles(path)
-      .filter { case (p, _) => p > s && p <= e }
-      .map { case (p, f) => ArticlePartition(Seq((p, f.getPath))) }
-      .toArray
+    ArticleSource.packPartitions(ArticleSource.pageFiles(path, PageRange(s + 1L, e)))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new ArticleReaderFactory(None, conf)

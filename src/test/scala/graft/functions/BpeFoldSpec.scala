@@ -2,7 +2,9 @@ package graft.functions
 
 import graft.SparkTestBase
 import org.apache.spark.sql.GraftPlanShim
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[BpeFold]] bit-identical to t20's SQL fold
@@ -66,6 +68,18 @@ class BpeFoldSpec extends AnyFunSuite {
       .select(encNew.as("a"), encOld.as("b"))
       .filter(not(col("a") <=> col("b"))).count()
     assert(diff == 0L)
+  }
+
+  test("a merge that is not exactly 2 code points fails, naming the element") {
+    def enc(merges: String*) = BpeFold(Literal("abc"),
+      Literal.create(merges, ArrayType(StringType))).eval()
+    val empty = intercept[IllegalArgumentException](enc("ab", ""))
+    assert(empty.getMessage.contains("merge 1 must be exactly 2 code points, got ''"))
+    val nul = intercept[IllegalArgumentException](enc("ab", null))
+    assert(nul.getMessage.contains("merge 1 must be exactly 2 code points, got null"))
+    val three = intercept[IllegalArgumentException](enc("abc"))
+    assert(three.getMessage.contains("merge 0 must be exactly 2 code points, got 'abc'"))
+    assert(enc("中文").toString == "|a|b|c|", "a 2-code-point multi-byte merge compiles")
   }
 
   test("null text yields null") {

@@ -84,22 +84,44 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(cursorFrom("""{"page": 7""") == 1L, "malformed body")
   }
 
-  private def v2Window(cursorBody: String, maxPages: Int) = {
+  private def v2WindowDf(cursorBody: String, maxPages: Int) = {
     val pages = s.read.format("graft.sources.ArticleSourceProvider")
       .option("path", s"${ArticlePipeline.fixturesDir}/articles").load()
-    graft.sources.ArticleSource.pagesParsed.set(0)
-    val got = ArticlePipeline.boundedPages(
+    ArticlePipeline.boundedPages(
       pages, ArticlePipeline.loadBackfillCursorFrom(s, cursorFile(cursorBody)), maxPages)
-      .select("page").distinct().collect().map(_.getInt(0)).sorted.toSeq
+  }
+
+  private def v2Window(cursorBody: String, maxPages: Int) = {
+    val window = v2WindowDf(cursorBody, maxPages)
+    graft.sources.ArticleSource.pagesParsed.set(0)
+    val got = window.select("page").distinct().collect().map(_.getInt(0)).sorted.toSeq
     (got, graft.sources.ArticleSource.pagesParsed.get)
+  }
+
+  /** Writes the window to a fresh date-partitioned sink; returns the
+    * (date dirs, data files) it left. */
+  private def sinkWindow(window: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val out = java.nio.file.Files.createTempDirectory("graft_window_sink_").toString
+    ArticlePipeline.writeDatePartitioned(ArticlePipeline.keepParsed(window), out)
+    val dates = new java.io.File(out).listFiles().filter(_.isDirectory)
+    (dates.length, dates.flatMap(_.listFiles()).count(_.getName.startsWith("part-")))
   }
 
   test("bounded window over the V2 source parses exactly maxPages pages") {
     assert(v2Window("""{"page": 2}""", 3) == (Seq(2, 3, 4), 3L))
+    // each scan task opens at most one sink file per date it holds
+    val window = v2WindowDf("""{"page": 1}""", 6)
+    val partitions = window.rdd.getNumPartitions
+    assert(partitions == 4, "six page files packed into one run per core")
+    val (dates, files) = sinkWindow(window)
+    assert(dates > 0 && files <= partitions * dates, s"$files files for $partitions x $dates")
   }
 
   test("a cursor past the last page gives an empty window; no page is parsed") {
     assert(v2Window("""{"page": 100}""", 3) == (Seq.empty, 0L))
+    val window = v2WindowDf("""{"page": 100}""", 3)
+    assert(window.rdd.getNumPartitions == 0, "no page files plan no partitions")
+    assert(sinkWindow(window) == (0, 0), "the empty window's sink write succeeds, writing nothing")
   }
 
   test("bounded micro-batch admits exactly maxPages pages from the cursor") {

@@ -1,11 +1,13 @@
 package graft.sources
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The V2 source's contract: same rows as the built-in JSON path, parallel
-  * per-page partitions in backfill mode, and a REAL early stop — stale
+  * contiguous page runs in backfill mode, and a REAL early stop — stale
   * pages must never be parsed, not parsed-then-filtered. */
 class ArticleSourceSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
@@ -14,12 +16,82 @@ class ArticleSourceSpec extends AnyFunSuite {
   private def v2 = s.read.format("graft.sources.ArticleSourceProvider")
     .option("path", path).load()
 
-  test("backfill mode (no watermark) reads every page, one partition each") {
+  /** The planned partitions' page runs, read off the executed scan. */
+  private def plannedRuns(df: DataFrame): Seq[Seq[Int]] =
+    SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+      .collectFirst { case b: BatchScanExec => b.inputPartitions }.get
+      .map(_.asInstanceOf[ArticlePartition].pages.map(_._1))
+
+  test("backfill mode reads every page in one contiguous run per core") {
     ArticleSource.pagesParsed.set(0)
     val rows = v2.collect()
     assert(rows.length == 28, "7+7+5+5+4+0 records across the six pages")
     assert(ArticleSource.pagesParsed.get == 6)
-    assert(v2.rdd.getNumPartitions == 6, "page-parallel planning without a watermark")
+    val runs = plannedRuns(v2)
+    assert(runs.length == 4, "local[4]: min(6 files, max(4 cores, 1 by bytes))")
+    assert(runs.forall(_.nonEmpty))
+    assert(runs.flatten == (1 to 6), "each run is contiguous; runs ascend in page order")
+    assert(v2.rdd.getNumPartitions == 4)
+  }
+
+  test("backfill partition count follows leaf parallelism and maxPartitionBytes") {
+    def runs(conf: (String, String)*): Seq[Seq[Int]] = {
+      val s2 = s.newSession()
+      conf.foreach { case (k, v) => s2.conf.set(k, v) }
+      plannedRuns(s2.read.format("graft.sources.ArticleSourceProvider")
+        .option("path", path).load())
+    }
+    assert(runs("spark.sql.leafNodeDefaultParallelism" -> "2").length == 2)
+    assert(runs("spark.sql.leafNodeDefaultParallelism" -> "100").length == 6,
+      "never more than one partition per file")
+    // 14,262 fixture bytes under a 3,000-byte cap need 5 runs, more than 2 cores
+    val capped = runs("spark.sql.leafNodeDefaultParallelism" -> "2",
+      "spark.sql.files.maxPartitionBytes" -> "3000")
+    assert(capped.length == 5)
+    assert(capped.flatten == (1 to 6))
+  }
+
+  // ---- packing: groupCount and packContiguous ----
+
+  test("groupCount: one per core, raised by the byte cap, capped by the file count") {
+    import ArticleSource.groupCount
+    assert(groupCount(15, 15L << 20, 4, 128L << 20) == 4, "a 15-page window on 4 cores")
+    assert(groupCount(15, 1000L << 20, 4, 128L << 20) == 8, "ceil(1000 MB / 128 MB)")
+    assert(groupCount(15, 128L << 20, 4, 128L << 20) == 4, "exactly one cap's worth")
+    assert(groupCount(15, 4000L << 20, 4, 128L << 20) == 15, "no more runs than files")
+    assert(groupCount(3, 300, 4, 128L << 20) == 3)
+    assert(groupCount(1, 5L << 30, 4, 128L << 20) == 1, "one file gives one partition")
+    assert(groupCount(0, 0, 4, 128L << 20) == 0, "no files give no partitions")
+  }
+
+  test("packContiguous keeps order and cuts contiguous, byte-balanced runs") {
+    import ArticleSource.packContiguous
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 500) {
+      val n = 1 + rnd.nextInt(40)
+      val sizes = Seq.fill(n)(if (rnd.nextInt(5) == 0) 1L + rnd.nextInt(100000)
+        else 1L + rnd.nextInt(1000))
+      val groups = 1 + rnd.nextInt(12)
+      val runs = packContiguous(sizes, groups)
+      assert(runs.length == math.min(groups, n))
+      assert(runs.forall(_.nonEmpty))
+      assert(runs.flatten == sizes.indices, "runs tile the files in order")
+      val bytes = runs.map(_.map(sizes).sum)
+      assert(bytes.max <= sizes.sum.toDouble / runs.length + sizes.max,
+        s"a run exceeds the mean plus the largest file: $sizes into $groups")
+    }
+    assert(packContiguous(Seq.fill(15)(100L), 4).map(_.length).sorted == Seq(3, 4, 4, 4),
+      "a 15-page window of equal pages on 4 cores")
+    // the fixture pages' bytes: no contiguous 4-way cut has a smaller largest run
+    assert(packContiguous(Seq(3535L, 3562, 2578, 2503, 2082, 2), 4) ==
+      Seq(0 until 1, 1 until 2, 2 until 3, 3 until 6))
+  }
+
+  test("packContiguous: no files give no runs, one file gives one run") {
+    import ArticleSource.packContiguous
+    assert(packContiguous(Seq.empty, 4).isEmpty)
+    assert(packContiguous(Seq(10L), 4) == Seq(0 until 1))
+    assert(packContiguous(Seq(0L, 0L, 0L), 2).flatten == (0 until 3), "zero-byte files still tile")
   }
 
   test("watermark pushdown stops the scan mid-page; later pages never parsed") {
