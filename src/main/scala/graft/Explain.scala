@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: print the formatted physical plan of one catalog query and
   * (optionally) its timed noop-sink run. Usage:
   *   tools/run.sh graft.Explain <queryName> [sfDir] [--run]
@@ -11,40 +9,7 @@ object Explain {
     val name = args.headOption.getOrElse(sys.error("usage: Explain <queryName> [sfDir] [--run]"))
     val sfDir = args.drop(1).find(!_.startsWith("--")).getOrElse("/root/testdata/sf0.1")
     val run = args.contains("--run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Reduce-side width is ADAPTIVE, not fixed: shuffles START at 512
-      // partitions and AQE coalesces down from runtime stats (to ~cores
-      // at bench SF, so small-scale plans are unchanged). A fixed
-      // `shuffle.partitions = cores` capped every reduce side at 32
-      // regardless of volume; at the 1000x step that put ~19M fact rows
-      // into each sort-merge task and the spill took q51 from ~50 s
-      // expected to 279 s measured (87 s with this setting), q70 from
-      // 275 to 163 s. Deliberately-sized scopes pin BOTH keys through
-      // graft.Widths.withWidth.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached/checkpointed blocks that spill to disk are serialized but
-      // UNCOMPRESSED by default (spark.rdd.compress=false); the graph
-      // kernels pin corpus-sized edge tables via localCheckpoint, and at
-      // the 1000x step p05's ~1G-row edge pin + build shuffles exhausted
-      // the box's 65 GB of scratch ("no space left on device", entry
-      // dead). lz4-compressing cached blocks (2-4x on id tables) is the
-      // standard knob for exactly this and costs only block-access CPU.
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; a 137-query
-      // catalog compiles far more distinct codegen classes than that, so
-      // the cache thrashes and queries pay Janino recompilation on every
-      // pass (measured on the dedup subset: d05 3.5 -> 2.1 s, d04/d07
-      // -25% with the cache sized to hold the whole catalog).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftEngine.install(spark)
+    val spark = GraftSession()
     // Bulk mode (r15 optimization round): `Explain --all <outDir> [sfDir]`
     // writes every catalog entry's formatted plan to <outDir>/<name>.txt in
     // ONE JVM — the per-entry single-plan mode below pays ~20 s of JVM+

@@ -1,36 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's check: SparkEntry.entry(spark)
   * must return rows > 0 on sf0.001. Prints the row count and first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Reduce-side width is ADAPTIVE, not fixed: shuffles START at 512
-      // partitions and AQE coalesces down from runtime stats (to ~cores
-      // at bench SF, so small-scale plans are unchanged). A fixed
-      // `shuffle.partitions = cores` capped every reduce side at 32
-      // regardless of volume; at the 1000x step that put ~19M fact rows
-      // into each sort-merge task and the spill took q51 from ~50 s
-      // expected to 279 s measured (87 s with this setting), q70 from
-      // 275 to 163 s. Deliberately-sized scopes pin BOTH keys through
-      // graft.Widths.withWidth.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; a 137-query
-      // catalog compiles far more distinct codegen classes than that, so
-      // the cache thrashes and queries pay Janino recompilation on every
-      // pass (measured on the dedup subset: d05 3.5 -> 2.1 s, d04/d07
-      // -25% with the cache sized to hold the whole catalog).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftEngine.install(spark)
+    val spark = GraftSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

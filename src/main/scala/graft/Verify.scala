@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,43 +11,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional name filter (dev aid; the driver passes exactly two args).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Reduce-side width is ADAPTIVE, not fixed: shuffles START at 512
-      // partitions and AQE coalesces down from runtime stats (to ~cores
-      // at bench SF, so small-scale plans are unchanged). A fixed
-      // `shuffle.partitions = cores` capped every reduce side at 32
-      // regardless of volume; at the 1000x step that put ~19M fact rows
-      // into each sort-merge task and the spill took q51 from ~50 s
-      // expected to 279 s measured (87 s with this setting), q70 from
-      // 275 to 163 s. Deliberately-sized scopes pin BOTH keys through
-      // graft.Widths.withWidth.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached/checkpointed blocks that spill to disk are serialized but
-      // UNCOMPRESSED by default (spark.rdd.compress=false); the graph
-      // kernels pin corpus-sized edge tables via localCheckpoint, and at
-      // the 1000x step p05's ~1G-row edge pin + build shuffles exhausted
-      // the box's 65 GB of scratch ("no space left on device", entry
-      // dead). lz4-compressing cached blocks (2-4x on id tables) is the
-      // standard knob for exactly this and costs only block-access CPU.
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; a 137-query
-      // catalog compiles far more distinct codegen classes than that, so
-      // the cache thrashes and queries pay Janino recompilation on every
-      // pass (measured on the dedup subset: d05 3.5 -> 2.1 s, d04/d07
-      // -25% with the cache sized to hold the whole catalog).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // keep ContextCleaner ahead of the 193-query session's shuffle/
-      // broadcast garbage (see Bench.scala for the sf10 measurement)
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftEngine.install(spark)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, CurrentRow, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IntegerLiteral, LessThan, LessThanOrEqual, Literal, PredicateHelper, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -138,37 +137,5 @@ object AutoLocalTopK extends Rule[LogicalPlan] with PredicateHelper {
             k, w.partitionSpec, w.orderSpec, c, MAX_GROUPS)))
         case _ => f // already rewritten: fixed-point stable
       }).getOrElse(f)
-  }
-}
-
-/** One-call engine install: the custom planner strategy plus the
-  * automatic top-k rewrite. Every session entry point (Verify, Bench,
-  * Explain, tests) calls this so the catalog runs against the SAME
-  * engine the production `spark.sql.extensions` flag configures. */
-object GraftEngine {
-  def install(spark: SparkSession): Unit = {
-    LocalTopK.register(spark)
-    AsofJoin.register(spark)
-    // Same rule set as GraftPlanExtensions — including the HOF dot
-    // rewrite, so plan parity between the two install paths never
-    // depends on which catalog entry happens to register it first.
-    RewriteHofDotProduct.register(spark)
-    if (!spark.experimental.extraOptimizations.contains(RewriteBinnedRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteBinnedRangeJoin
-    if (!spark.experimental.extraOptimizations.contains(AutoLocalTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AutoLocalTopK
-    if (!spark.experimental.extraOptimizations.contains(RewriteEagerAgg))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteEagerAgg
-    RewriteBitmapDistinct.register(spark)
-    RewriteSelfJoinAgg.register(spark)
-    RewriteOrExpansion.register(spark)
-    TableConstraints.registerStarSchema()
-    RewriteJoinElimination.register(spark)
-    RewriteTopKThroughJoin.register(spark)
-    RewriteDistinctByKey.register(spark)
-    RewriteNotInToAnti.register(spark)
   }
 }

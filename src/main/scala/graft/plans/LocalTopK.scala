@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -169,33 +168,5 @@ object LocalTopK {
       case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
     }
     org.apache.spark.sql.GraftPlanShim.ofRows(spark, LocalTopKPerGroup(k, g, o, child))
-  }
-}
-
-/** Production registration path (same jar flag as the functions):
-  * --conf spark.sql.extensions=graft.plans.GraftPlanExtensions */
-class GraftPlanExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => LocalTopKStrategy)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
-    ext.injectOptimizerRule(_ => RewriteBinnedRangeJoin)
-    ext.injectOptimizerRule(_ => RewriteEagerAgg)
-    // Runs in the custom operator-optimization batch (before Spark's own
-    // InferWindowGroupLimit) — the bare Filter+Window shape is matched;
-    // the session-path install (GraftEngine) uses extraOptimizations and
-    // matches the WindowGroupLimit takeover shape instead. Both end at
-    // the same pruned plan.
-    ext.injectOptimizerRule(_ => AutoLocalTopK)
-    ext.injectOptimizerRule(_ => RewriteBitmapDistinct)
-    ext.injectOptimizerRule(_ => RewriteSelfJoinAgg)
-    ext.injectOptimizerRule(_ => RewriteOrExpansion)
-    // Fixed-point batch: column pruning exposes the dead join within the
-    // same batch's later iterations, so the elimination still fires.
-    TableConstraints.registerStarSchema()
-    ext.injectOptimizerRule(_ => RewriteJoinElimination)
-    ext.injectOptimizerRule(_ => RewriteTopKThroughJoin)
-    ext.injectOptimizerRule(_ => RewriteDistinctByKey)
-    ext.injectOptimizerRule(_ => RewriteNotInToAnti)
   }
 }

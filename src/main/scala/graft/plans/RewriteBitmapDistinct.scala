@@ -113,10 +113,4 @@ object RewriteBitmapDistinct extends Rule[LogicalPlan] {
           child = innerFixed)
       } else agg
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

@@ -167,10 +167,4 @@ object RewriteDistinctByKey extends Rule[LogicalPlan] {
     case s: SubqueryAlias => uniqueOn(s.child, keys)
     case _ => false
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

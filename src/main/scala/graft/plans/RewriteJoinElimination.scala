@@ -299,10 +299,4 @@ object RewriteJoinElimination extends Rule[LogicalPlan] with PredicateHelper {
     case j @ Join(_, _, LeftSemi, _, _) =>
       tryLicense(j, j.left, j.right, outer = false).getOrElse(j)
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

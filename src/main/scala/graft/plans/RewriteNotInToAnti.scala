@@ -56,10 +56,4 @@ object RewriteNotInToAnti extends Rule[LogicalPlan] {
         .exists { case (t, c) => TableConstraints.nonNullColumn(t, c) }
     nonNull(left, a) && nonNull(right, b)
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

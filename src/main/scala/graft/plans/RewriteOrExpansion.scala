@@ -89,10 +89,4 @@ object RewriteOrExpansion extends Rule[LogicalPlan] {
       }
       rewritten.getOrElse(j)
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

@@ -197,10 +197,4 @@ object RewriteSelfJoinAgg extends Rule[LogicalPlan] {
     }
     Some(Project(projList, win))
   }
-
-  /** Session-path registration (mirrors the other graft rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

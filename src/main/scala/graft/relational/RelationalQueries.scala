@@ -1249,7 +1249,6 @@ object RelationalQueries {
       |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
       |  FROM orders)
       |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin) { (s, d) =>
-    graft.plans.GraftEngine.install(s)
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     ord(s, d)
@@ -2203,7 +2202,6 @@ object RelationalQueries {
       |FROM (SELECT *, row_number() OVER (PARTITION BY o_year
       |        ORDER BY total_qty DESC, o_orderpriority) AS rn FROM agg)
       |WHERE rn <= 2 ORDER BY o_year, rn""".stripMargin) { (s, d) =>
-    graft.plans.GraftEngine.install(s)
     val dir = java.nio.file.Paths.get(q70Dir)
     val factPath = dir.resolve("orders_by_year").toString
     // Stage the year-partitioned fact layout. Spreading the shuffle over
@@ -2817,7 +2815,6 @@ object RelationalQueries {
     "q84_bitmap_distinct_auto",
     """SELECT o_orderstatus AS status, COUNT(DISTINCT o_custkey) AS n_customers
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    graft.plans.RewriteBitmapDistinct.register(s)
     // alias via a Project first: the rule's narrow match requires the
     // grouping expressions to be plain attributes
     Tables.t(s, d, "orders")
@@ -2910,7 +2907,6 @@ object RelationalQueries {
       |  CAST((o.cents * 10000) // a.cust_cents AS BIGINT) AS share_bp
       |FROM o JOIN a ON o.o_custkey = a.o_custkey
       |ORDER BY o.o_orderkey""".stripMargin) { (s, d) =>
-    graft.plans.RewriteSelfJoinAgg.register(s)
     val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -2947,7 +2943,6 @@ object RelationalQueries {
       |                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
       |  FROM documents)
       |WHERE rn <= 100 ORDER BY source, rn""".stripMargin) { (s, d) =>
-    graft.plans.GraftEngine.install(s)
     val w = Window.partitionBy("source")
       .orderBy(md5(col("doc_id").cast("string")).asc, col("doc_id").asc)
     Tables.t(s, d, "documents")
@@ -3106,7 +3101,6 @@ object RelationalQueries {
       |FROM p a JOIN p b
       |  ON (a.pre = b.pre OR a.suf = b.suf) AND a.doc_id < b.doc_id
       |GROUP BY 1 ORDER BY u""".stripMargin) { (s, d) =>
-    graft.plans.RewriteOrExpansion.register(s)
     val toks = split(col("text"), " ")
     val p = Tables.t(s, d, "documents").select(col("doc_id"),
       concat_ws(" ", slice(toks, 1, 3)).as("pre"),
@@ -3342,7 +3336,7 @@ object RelationalQueries {
     * rule deletes it, collapsing the whole query to a TakeOrdered heap
     * scan — zero exchanges. At 100 TB the deleted exchange IS the
     * query's cost. DistinctElimSpec asserts both plan shapes and row
-    * parity; PROBE_Q96 measures the win. ORDER BY is total
+    * parity; SCALE.md records the win. ORDER BY is total
     * (value can tie; event_id cannot). */
   val q96DistinctElimAuto: Q = Q(
     "q96_distinct_elim_auto",
@@ -3419,7 +3413,7 @@ object RelationalQueries {
     * ([[graft.plans.RewriteNotInToAnti]], the sixth RELY consumer):
     * the "exclude a computed blocklist" shape — events whose user is
     * NOT in a customer segment. Stock Spark must plan the null-aware
-    * anti join, whose broadcast build is FORCED — `PROBE_Q100` shows
+    * anti join, whose broadcast build is FORCED — `PROBE_Q100` showed
     * the plan pinned to `BroadcastHashJoin(…, isNullAware=true)` even
     * at a 1 KB threshold, because no shuffle strategy implements the
     * null semantics; at 100 TB that is a mandatory multi-GB blocklist
@@ -3498,10 +3492,7 @@ object RelationalQueries {
        |FROM r WHERE rn <= 5000
        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    // N is overridable for scale probes ONLY (PROBE_TOPN runs the same
-    // code at N=10M to validate the scaladoc's "N changes only the
-    // constant" claim); the default matches the oracle's rn <= 5000.
-    val n = sys.props.get("graft.q101.n").map(_.toLong).getOrElse(5000L)
+    val n = 5000L // the oracle's rn <= 5000
     val li = Tables.t(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_orderkey"), col("l_linenumber"))
@@ -3594,9 +3585,7 @@ object RelationalQueries {
        |  MAX(l_extendedprice) AS max_price
        |FROM r WHERE rn <= 20000
        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    // same probe-only N override contract as q101 (default = oracle's N)
-    sampledTopn(s, d,
-      sys.props.get("graft.q102.n").map(_.toLong).getOrElse(20000L))
+    sampledTopn(s, d, 20000L) // the oracle's rn <= 20000
   }
 
   /** The q102 algorithm with the target N as a parameter (the spec

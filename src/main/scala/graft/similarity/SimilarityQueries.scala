@@ -24,16 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
 
-  /** Every entry reads through here, which also activates the
-    * HOF-dot-product optimizer rule: all the `dot`/`cosine` helpers
-    * below are WRITTEN as interpreted higher-order folds and rewritten
+  /** The `dot`/`cosine` helpers below are WRITTEN as interpreted
+    * higher-order folds; the engine's HOF-dot-product optimizer rule
+    * (graft.plans.GraftEngine, installed on every session) rewrites them
     * to the codegen'd native DotProduct at plan time (bit-exact — the
-    * hash oracles prove it per entry). Registration here, not per
-    * entry, so the acceleration never depends on catalog run order. */
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RewriteHofDotProduct.register(s)
+    * hash oracles prove it per entry). */
+  private def emb(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "embeddings")
-  }
 
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
@@ -96,7 +93,6 @@ object SimilarityQueries {
     // optimizer rule (graft.plans.RewriteHofDotProduct) swaps in the
     // codegen'd native DotProduct — bit-exact, proven by this entry
     // still hash-matching its oracle (plan asserted in HofRewriteSpec).
-    graft.plans.RewriteHofDotProduct.register(s)
     val e = emb(s, d)
     val probe = e.filter(col("vec_id") === 7)
       .select(col("embedding").cast("array<double>").as("pv"))

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Join-inventory audit for the r13 "d19 disease" sweep (VERDICT r12 item
@@ -26,19 +24,8 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftEngine.install(spark)
 
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
@@ -46,17 +33,12 @@ object PlanAudit {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     })
 
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(flatten)
-    }
     def outRows(p: SparkPlan): Long =
       p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
     // first descendant that reports row counts (skips sorts/exchanges/AQE
     // wrappers that don't, so "input rows" is the stream the sort sees)
     def inRows(p: SparkPlan): Long = {
-      val withRows = flatten(p).find(n => outRows(n) >= 0)
+      val withRows = graft.GraftSession.flattenPlan(p).find(n => outRows(n) >= 0)
       withRows.map(outRows).getOrElse(-1L)
     }
     def keysOf(j: BaseJoinExec): String = j match {
@@ -83,7 +65,7 @@ object PlanAudit {
       while (prev != captured.size && spins < 100) { prev = captured.size; Thread.sleep(100); spins += 1 }
       import scala.jdk.CollectionConverters._
       val joins = captured.asScala.toSeq
-        .flatMap(qe => flatten(qe.executedPlan))
+        .flatMap(qe => graft.GraftSession.flattenPlan(qe.executedPlan))
         .collect { case j: BaseJoinExec => j }
       println(f"== ${q.name} wall=$wall%.1f s  joins=${joins.size}")
       joins.foreach { j =>

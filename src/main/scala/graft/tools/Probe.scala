@@ -1,172 +1,27 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Scratch profiling main (not part of the catalog): decompose an
-  * entry's wall time into scan / arithmetic / accumulation components. */
+/** Stage-decomposition probes for the investigations an open ROADMAP
+  * item still names (not part of the catalog). One probe per run, picked
+  * by environment variable:
+  *   PROBE_D19V=1        d19 containment pipeline stages (d19 residual)
+  *   PROBE_STREAMSTATE=1 max state rows per stateful streaming entry
+  *   PROBE_ST23SPLIT=1   st23 cost split and history-tier growth
+  *   PROBE_P04=1         p04 per-stage decomposition
+  * Usage: PROBE_X=1 SPARK_GRAFT_SF_DIR=<dir> tools/run.sh graft.tools.Probe
+  * Probes for closed investigations were deleted; SCALE.md records their
+  * numbers and how to recover their code from git history. */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Reduce-side width is ADAPTIVE, not fixed: shuffles START at 512
-      // partitions and AQE coalesces down from runtime stats (to ~cores
-      // at bench SF, so small-scale plans are unchanged). A fixed
-      // `shuffle.partitions = cores` capped every reduce side at 32
-      // regardless of volume; at the 1000x step that put ~19M fact rows
-      // into each sort-merge task and the spill took q51 from ~50 s
-      // expected to 279 s measured (87 s with this setting), q70 from
-      // 275 to 163 s. Deliberately-sized scopes pin BOTH keys through
-      // graft.Widths.withWidth.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached/checkpointed blocks that spill to disk are serialized but
-      // UNCOMPRESSED by default (spark.rdd.compress=false); the graph
-      // kernels pin corpus-sized edge tables via localCheckpoint, and at
-      // the 1000x step p05's ~1G-row edge pin + build shuffles exhausted
-      // the box's 65 GB of scratch ("no space left on device", entry
-      // dead). lz4-compressing cached blocks (2-4x on id tables) is the
-      // standard knob for exactly this and costs only block-access CPU.
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def time(tag: String)(f: => DataFrame): Unit = {
       f.queryExecution // warm plan
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
       println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
-    sys.env.get("PROBE_SHUF").foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    if (sys.env.contains("PROBE_TOPN")) {
-      // VERDICT r12 item 6: validate the q101/q102 scaladoc claim that a
-      // 10M-row N "changes nothing but the constant". Runs both entries
-      // with the probe-only N override at TOPN_N (default 10M), prints
-      // the wall, checks the selected multiset size is EXACTLY
-      // min(N, corpus), and re-asserts the DistributedTopnSpec plan
-      // invariant at this N — no single-partition window in ANY of the
-      // run's executed plans (including the materialized sample/walk
-      // sub-jobs, via the listener) processed more than the recursion's
-      // 16384-row bound.
-      graft.plans.GraftEngine.install(spark)
-      val n = sys.env.getOrElse("TOPN_N", "10000000").toLong
-      val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.execution.QueryExecution]()
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-          { captured.add(qe); () }
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      })
-      def flat(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => flat(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => flat(q.plan)
-        case o => o +: (o.children ++ o.subqueries).flatMap(flat)
-      }
-      val corpus = graft.Tables.t(spark, d, "lineitem").count()
-      Seq(
-        ("q101", "graft.q101.n",
-          () => graft.relational.RelationalQueries.q101DistributedTopn.fn(spark, d)),
-        ("q102", "graft.q102.n",
-          () => graft.relational.RelationalQueries.q102SampledTopn.fn(spark, d))
-      ).foreach { case (tag, prop, mk) =>
-        captured.clear()
-        sys.props.put(prop, n.toString)
-        try {
-          val t0 = System.nanoTime()
-          val rows = mk().collect()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val selected = rows.map(_.getLong(1)).sum
-          var prev = -1; var spins = 0
-          while (prev != captured.size && spins < 100) {
-            prev = captured.size; Thread.sleep(100); spins += 1 }
-          import scala.jdk.CollectionConverters._
-          val nodes = captured.asScala.toSeq.flatMap(qe => flat(qe.executedPlan))
-          val allWins = nodes.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec => w }
-          val globalWins = allWins.filter(_.partitionSpec.isEmpty)
-          // WindowExec itself reports only spillSize in this Spark
-          // version (no numOutputRows — a naive metrics.get here is
-          // vacuously 0/-1), so the window's volume is read from the
-          // nearest DESCENDANT that does report rows: the exchange's
-          // shuffle-records counters or any numOutputRows below it.
-          def rowsInto(w: org.apache.spark.sql.execution.SparkPlan): Long =
-            flat(w).drop(1).iterator.flatMap(n => n.metrics.collectFirst {
-              case (k, m) if k == "numOutputRows" ||
-                k.toLowerCase.contains("records") => m.value
-            }).toSeq.headOption.getOrElse(-1L)
-          val winRows = globalWins.map(rowsInto)
-          val maxWin = (0L +: winRows).max
-          println(s"[probe]   ($tag captured ${captured.size} executions, " +
-            s"${allWins.size} windows total, ${globalWins.size} global, " +
-            s"rows-into-global=${winRows.mkString("/")})")
-          val countOk = selected == math.min(n, corpus)
-          val winOk = maxWin <= 16384L
-          println(f"[probe] $tag N=$n%,d wall=$wall%.1f s selected=$selected%,d " +
-            f"(expect ${math.min(n, corpus)}%,d ${if (countOk) "OK" else "MISMATCH"}) " +
-            f"max-global-window-rows=$maxWin%,d ${if (winOk) "OK" else "UNBOUNDED"}")
-        } finally { sys.props.remove(prop); graft.Stage.release() }
-      }
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_D10")) {
-      val e = graft.Tables.t(spark, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      graft.plans.RewriteHofDotProduct.register(spark)
-      def dotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-      val k = e.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(8L), expr("n div 256")).as("k"))
-      val c0 = e.crossJoin(broadcast(k)).filter(col("vec_id") < col("k"))
-        .select(col("vec_id").as("cell"), col("v").as("c"))
-      val dist = (dotc(col("v"), col("v")) - lit(2) * dotc(col("v"), col("c"))) +
-        dotc(col("c"), col("c"))
-      val assign = e.crossJoin(broadcast(c0))
-        .groupBy("vec_id")
-        .agg(graft.functions.ArgMinLong.argmin(dist, col("cell")).as("cell"))
-      assign.explain("formatted")
-      time("assign")(assign)
-      time("assign2")(assign)
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q102")) {
-      // q102 stage split: corpus scan, sample+boundaries, bucket+walk,
-      // full entry — find the 5.2-vs-q101's-1.8 gap.
-      val li = graft.Tables.t(spark, d, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice").as("v"),
-          col("l_orderkey"), col("l_linenumber"))
-      time("scan")(li.groupBy().agg(count(lit(1)).as("n")))
-      val h = conv(substring(md5(concat_ws("-",
-        col("l_orderkey").cast("string"), col("l_linenumber").cast("string"))),
-        1, 8), 16, 10).cast("long")
-      val m = math.max(1L, li.count() / 4096)
-      time("sample-filter")(li.filter(h % m === 0)
-        .groupBy().agg(count(lit(1)).as("n")))
-      val samp = li.filter(h % m === 0)
-        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(
-            col("v").desc, col("l_orderkey"), col("l_linenumber"))).cast("long"))
-        .withColumn("ns", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy()))
-      val bnd = graft.Stage.materialize(spark, samp
-        .filter((col("rn") - 1) % greatest(lit(1L), expr("ns div 64")) === 0)
-        .agg(array_sort(collect_list(col("v"))).as("arr")), "q102p")
-      time("bnd-build")(bnd)
-      val bucketed = li.crossJoin(broadcast(bnd))
-        .withColumn("bkt",
-          size(filter(col("arr"), b => col("v") >= b)).cast("long"))
-        .drop("arr")
-      time("bucket+count")(bucketed.groupBy("bkt").agg(count(lit(1)).as("bn")))
-      time("full-q102")(graft.relational.RelationalQueries.q102SampledTopn.fn(spark, d))
-      time("full-q101")(graft.relational.RelationalQueries.q101DistributedTopn.fn(spark, d))
-      spark.stop(); sys.exit(0)
     }
     if (sys.env.contains("PROBE_D19V")) {
       // d19 VERIFICATION cost decomposition: is the 62 s verify stage
@@ -384,95 +239,6 @@ object Probe {
       sys.props.remove("graft.d19.forceJoinBack")
       spark.stop(); sys.exit(0)
     }
-    if (sys.env.contains("PROBE_T21")) {
-      // t21 stage split: where does the sfc100 wall actually sit —
-      // scan+tokenize, the per-token classify, the histogram fold, or
-      // the old explode+groupBy?
-      val toks = split(col("text"), " ")
-      def base = graft.Layout.widen(spark,
-        graft.Tables.t(spark, d, "documents"))
-        .select(col("doc_id"), toks.as("toks"))
-      time("scan+tokenize+size")(base.select(col("doc_id"),
-        size(col("toks")).as("n")))
-      val letters = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-      time("classify-translate")(base.select(col("doc_id"),
-        size(filter(col("toks"), t =>
-          length(translate(t, "0123456789", "")) === 0 && length(t) > 0)).as("d"),
-        size(filter(col("toks"), t =>
-          length(translate(t, letters, "")) < length(t))).as("a")))
-      time("sort-hashes")(base.select(col("doc_id"),
-        size(sort_array(transform(col("toks"), t => xxhash64(t)))).as("n")))
-      time("explode+groupBy")(base
-        .select(col("doc_id"), explode(col("toks")).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(sum(col("c")).as("n"), max(col("c")).as("m")))
-      time("full-t21")(graft.text.TextQueries.t21QualityRules.fn(spark, d))
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_HISTJOIN")) {
-      // st23 history-tier cost model (r13 verdict item 5): the per-batch
-      // verdict join reads the parquet history table and left-joins the
-      // batch's bands — st11's shape. The scaladoc cites d08's bloom
-      // routing as the scale answer for the history side but never
-      // measured it; this probe does. H history rows (HIST_H, default
-      // 10M) and 10H, fixed batch B (HIST_B, default 2.5M — the sf100
-      // per-batch live band volume: 5M docs / 4 batches x 2 bands),
-      // fixed 5% true-hit fraction so the verdict volume is identical
-      // at both rungs. Variants per rung:
-      //   plain — st23's shipped shape: history.distinct left-joined in.
-      //   bloom — d08 routing: a driver-built bloom over the BATCH's
-      //     band hashes filters the history SCAN to ~hits + fp before
-      //     the join, so the exchange carries candidate hits, not the
-      //     whole history.
-      val H = sys.env.getOrElse("HIST_H", "10000000").toLong
-      val B = sys.env.getOrElse("HIST_B", "2500000").toLong
-      def bandOf(c: org.apache.spark.sql.Column) = concat_ws(":",
-        pmod(c, lit(2L)).cast("string"),
-        conv(substring(md5(c.cast("string")), 1, 8), 16, 10),
-        conv(substring(md5(c.cast("string")), 9, 8), 16, 10),
-        conv(substring(md5(c.cast("string")), 17, 8), 16, 10),
-        conv(substring(md5(c.cast("string")), 25, 8), 16, 10))
-      val base = java.nio.file.Paths.get(graft.TempDirs.newTempDir("graft_histjoin_"))
-      def t[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[probe] $tag%-26s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-        r
-      }
-      // batch bands: ids < 0.05B land inside [0, H) (true hits at every
-      // rung since H >= B); the rest sit above 10*H (never hits)
-      val batch = spark.range(B).select(col("id"),
-        bandOf(when(col("id") < (B / 20L), col("id"))
-          .otherwise(col("id") + 20L * H)).as("band"))
-        .localCheckpoint()
-      println(s"[probe] batch rows = ${batch.count()}")
-      for (h <- Seq(H, 10L * H)) {
-        val histDir = base.resolve(s"hist_$h").toString
-        t(s"hist-write h=$h")(spark.range(h).select(bandOf(col("id")).as("band"))
-          .write.mode("overwrite").parquet(histDir))
-        for (pass <- 1 to 2) {
-          t(s"plain h=$h p$pass") {
-            val n = batch.join(
-                spark.read.parquet(histDir).distinct()
-                  .withColumn("in_hist", lit(true)), Seq("band"), "left")
-              .filter(coalesce(col("in_hist"), lit(false))).count()
-            println(s"[probe]   plain hits = $n")
-          }
-          t(s"bloom h=$h p$pass") {
-            val bf = batch.stat.bloomFilter(xxhash64(col("band")), B, 0.01)
-            val bc = spark.sparkContext.broadcast(bf)
-            val mightContain = udf((x: Long) => bc.value.mightContain(x))
-            val routed = spark.read.parquet(histDir)
-              .filter(mightContain(xxhash64(col("band")))).distinct()
-            val n = batch.join(routed.withColumn("in_hist", lit(true)),
-                Seq("band"), "left")
-              .filter(coalesce(col("in_hist"), lit(false))).count()
-            println(s"[probe]   bloom hits = $n")
-          }
-        }
-      }
-      spark.stop(); sys.exit(0)
-    }
     if (sys.env.contains("PROBE_STREAMSTATE")) {
       // Stateful-tier state-store ladder: replay the sf dir's events
       // through the stateful entries and record per-batch state rows
@@ -541,40 +307,6 @@ object Probe {
       spark.streams.removeListener(listener)
       spark.stop(); sys.exit(0)
     }
-    if (sys.env.contains("PROBE_BANDPLAN")) {
-      // Formatted plans of the st21/st23 band derivation, old HOF form
-      // vs the shipped SaltedMinHash kernel (r16) — the streaming
-      // entries' bulk Explain dump shows only their post-stream final
-      // frame, so the plans/r16 before/after artifacts come from the
-      // batch-equivalent pipeline (the SAME projection stages the
-      // micro-batch plan runs over each staged file).
-      val docs = graft.Tables.t(spark, d, "documents").select("doc_id", "text")
-      val hash8: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        t => array((0 until 8).map(i =>
-          conv(substring(md5(concat(lit(s"$i:"), t)), 1, 8), 16, 10).cast("long")): _*)
-      val msOld = docs
-        .select(col("doc_id"), split(col("text"), " ").as("tk"))
-        .select(col("doc_id"), array_distinct(transform(
-          sequence(lit(1), size(col("tk")) - 2),
-          i => concat_ws(" ", element_at(col("tk"), i),
-            element_at(col("tk"), i + 1), element_at(col("tk"), i + 2)))).as("sh"))
-        .select(col("doc_id"), aggregate(col("sh"),
-          array((0 until 8).map(_ => lit(Long.MaxValue)): _*),
-          (acc, t) => zip_with(acc, hash8(t), (a, b) => least(a, b))).as("ms"))
-        .select(col("doc_id"), explode(array((0 until 2).map(j =>
-          concat_ws(":", lit(j.toString),
-            element_at(col("ms"), 4 * j + 1).cast("string"),
-            element_at(col("ms"), 4 * j + 2).cast("string"),
-            element_at(col("ms"), 4 * j + 3).cast("string"),
-            element_at(col("ms"), 4 * j + 4).cast("string"))): _*)).as("band"))
-      println("=== BAND DERIVATION, BEFORE (r15 staged-HOF form, verbatim) ===")
-      println(msOld.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      println("=== BAND DERIVATION, AFTER (SaltedMinHash kernel, shipped) ===")
-      println(graft.streaming.StreamingQueries.bandize(docs)
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
-      spark.stop(); sys.exit(0)
-    }
     if (sys.env.contains("PROBE_ST23SPLIT")) {
       // st23 cost split + history-growth (r14 verdict items 2/5): the
       // board's slowest bench entry, decomposed via boundedStateNearDup's
@@ -616,225 +348,6 @@ object Probe {
         val seed = spark.range(n).select(concat(lit("h:"), col("id")).as("band"))
         w3(s"full+hist$n", "full", Some(seed))
       }
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_D10L")) {
-      // Log-tree d10: final cell histogram — Σ|cell|² IS the pair-stage
-      // cost, so this is the one number that decides whether the
-      // descent is funneling (the replica-decorrelation failure mode).
-      val out = graft.dedup.DedupQueries.d10SemanticDedup.fn(spark, d)
-      val r = out.agg(sum(col("n_members")).as("n"),
-        max(col("n_members")).as("mx"), count(lit(1)).as("cells"),
-        sum(col("n_members") * col("n_members")).as("sumsq")).collect()(0)
-      println(s"[probe] d10 members=${r.get(0)} max=${r.get(1)} " +
-        s"cells=${r.get(2)} sumsq=${r.get(3)}")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_D10S")) {
-      // d10 stage split: coarse assignment (N·g dots), fine assignment
-      // (N·k/g dots), within-cell pair stage (Σ|cell|² dots) — the
-      // terms of the 2N√k + N·cellsize cost model the 1000x step bends
-      // on. Mirrors DedupQueries.d10 exactly.
-      import graft.functions.ArgMinLong.argmin
-      graft.plans.RewriteHofDotProduct.register(spark)
-      def dotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-      val e = graft.Tables.t(spark, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val k = e.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(8L), expr("n div 256")).as("k"))
-      val c0 = e.crossJoin(broadcast(k)).filter(col("vec_id") < col("k"))
-        .select(col("vec_id").as("cell"), col("v").as("c"),
-          dotc(col("v"), col("v")).as("cn"))
-      val g = k.select(greatest(lit(4L),
-        expr("CAST(FLOOR(SQRT(k)) AS LONG)")).as("g"))
-      val co = c0.crossJoin(broadcast(g)).filter(col("cell") < col("g"))
-        .select(col("cell").as("gcell"), col("c").as("gc"), col("cn").as("gcn"))
-      val f2c = c0.crossJoin(broadcast(co))
-        .groupBy("cell")
-        .agg(argmin(col("gcn") - lit(2) * dotc(col("c"), col("gc")),
-          col("gcell")).as("gcell"))
-      val vg = e.crossJoin(broadcast(co))
-        .groupBy("vec_id")
-        .agg(argmin(col("gcn") - lit(2) * dotc(col("v"), col("gc")),
-          col("gcell")).as("gcell"))
-      time("d10_coarse_assign")(vg)
-      val bcand = f2c.join(c0, "cell")
-        .select(col("gcell"), col("cell"), col("c"), col("cn"))
-      val eg = e.join(vg, "vec_id")
-      val fine = eg.join(broadcast(bcand), "gcell")
-        .groupBy("vec_id")
-        .agg(argmin(col("cn") - lit(2) * dotc(col("v"), col("c")),
-          col("cell")).as("cell"))
-      time("d10_coarse_plus_fine")(fine)
-      val cells = graft.Stage.materialize(spark,
-        eg.select(col("vec_id"), col("v")).join(fine, "vec_id")
-          .select(col("vec_id"), col("v"), col("cell"),
-            sqrt(dotc(col("v"), col("v"))).as("nrm")),
-        "d10cellsProbe")
-      val a = cells.select(col("cell"), col("vec_id").as("i"),
-        col("v").as("vi"), col("nrm").as("ni"))
-      val b = cells.select(col("cell"), col("vec_id").as("j"),
-        col("v").as("vj"), col("nrm").as("nj"))
-      val cos = least(greatest(
-        dotc(col("vi"), col("vj")) / (col("ni") * col("nj")), lit(-1.0)), lit(1.0))
-      val dups = a.join(b, Seq("cell"))
-        .filter(col("j") < col("i") && cos > 0.35)
-        .select(col("i").as("vec_id")).distinct()
-      time("d10_pairs")(dups)
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_D10T")) {
-      // three-level d10 stage split: descent stages + pair stage, plus
-      // the cell-size distribution (pair volume = sum |cell|^2).
-      import graft.functions.ArgMinLong.argmin
-      graft.plans.RewriteHofDotProduct.register(spark)
-      def dotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-      val e = graft.Tables.t(spark, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val dims = e.agg(count(lit(1)).as("n"))
-        .select(greatest(lit(8L), expr("n div 256")).as("k"))
-        .select(col("k"), explode(sequence(lit(1L), lit(4096L))).as("i"))
-        .filter(col("i") * col("i") * col("i") <= col("k"))
-        .groupBy("k").agg(max(col("i")).as("t0"))
-        .select(col("k"), greatest(lit(2L), col("t0")).as("t"))
-        .select(col("k"), col("t"), (col("t") * col("t")).as("m"))
-        .select(col("k"), col("t"), col("m"),
-          expr("k div m").as("ms"), expr("k div t").as("ts"))
-      val hbp = e.select(col("vec_id"),
-          conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-            .cast("long").as("h"))
-        .crossJoin(broadcast(dims))
-        .select(col("vec_id"), col("h"), (col("h") % col("k")).as("cell"))
-      val win = hbp.groupBy("cell")
-        .agg(min(struct(col("h"), col("vec_id"))).as("w"))
-        .select(col("cell"), col("w").getField("vec_id").as("cvid"))
-      val c0 = e.join(broadcast(win), col("vec_id") === col("cvid"))
-        .crossJoin(broadcast(dims))
-        .select(col("cell"), col("v").as("c"), dotc(col("v"), col("v")).as("cn"),
-          col("ms"), col("ts"))
-      val cm = c0.filter(col("cell") % col("ms") === 0)
-        .select(col("cell").as("mcell"), col("c").as("mc"), col("cn").as("mcn"))
-      val ct = c0.filter(col("cell") % col("ts") === 0)
-        .select(col("cell").as("tcell"), col("c").as("tc"), col("cn").as("tcn"))
-      val m2t = cm.crossJoin(broadcast(ct)).groupBy("mcell")
-        .agg(argmin(col("tcn") - lit(2) * dotc(col("mc"), col("tc")), col("tcell")).as("tcell"))
-      val f2m = c0.crossJoin(broadcast(cm)).groupBy("cell")
-        .agg(argmin(col("mcn") - lit(2) * dotc(col("c"), col("mc")), col("mcell")).as("mcell"))
-      val vtop = e.crossJoin(broadcast(ct)).groupBy("vec_id")
-        .agg(argmin(col("tcn") - lit(2) * dotc(col("v"), col("tc")), col("tcell")).as("tcell"))
-      time("d10t_vtop")(vtop)
-      val mcand = m2t.join(cm, "mcell")
-        .select(col("tcell"), col("mcell"), col("mc"), col("mcn"))
-      val et = e.join(vtop, "vec_id")
-      val vm = et.join(broadcast(mcand), "tcell").groupBy("vec_id")
-        .agg(argmin(col("mcn") - lit(2) * dotc(col("v"), col("mc")), col("mcell")).as("mcell"))
-      time("d10t_vtop_plus_vm")(vm)
-      val bcand = f2m.join(c0, "cell")
-        .select(col("mcell"), col("cell"), col("c"), col("cn"))
-      val em = et.select(col("vec_id"), col("v")).join(vm, "vec_id")
-      val fine = em.join(broadcast(bcand), "mcell").groupBy("vec_id")
-        .agg(argmin(col("cn") - lit(2) * dotc(col("v"), col("c")), col("cell")).as("cell"))
-      time("d10t_full_descent")(fine)
-      val cells = graft.Stage.materialize(spark,
-        em.select(col("vec_id"), col("v")).join(fine, "vec_id")
-          .select(col("vec_id"), col("v"), col("cell"),
-            sqrt(dotc(col("v"), col("v"))).as("nrm")), "d10tProbe")
-      // bucket fanouts + pair volume
-      cells.groupBy("cell").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("cells"), max("n").as("max_cell"),
-          sum(col("n") * col("n")).as("pair_vol")).show(false)
-      vm.groupBy("mcell").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("mids"), max("n").as("max_mid")).show(false)
-      vtop.groupBy("tcell").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("tops"), max("n").as("max_top")).show(false)
-      val a = cells.select(col("cell"), col("vec_id").as("i"), col("v").as("vi"), col("nrm").as("ni"))
-      val b = cells.select(col("cell"), col("vec_id").as("j"), col("v").as("vj"), col("nrm").as("nj"))
-      val cos = least(greatest(
-        dotc(col("vi"), col("vj")) / (col("ni") * col("nj")), lit(-1.0)), lit(1.0))
-      time("d10t_pairs")(a.join(b, Seq("cell"))
-        .filter(col("j") < col("i") && cos > 0.35)
-        .select(col("i").as("vec_id")).distinct())
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q86")) {
-      // Shuffle/IO cost of the q86 naive self-join-agg shape with the
-      // RewriteSelfJoinAgg rule on vs off (documentation measurement).
-      val s = spark
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      @volatile var recs = 0L; @volatile var bytes = 0L; @volatile var read = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-          bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-          read += sc.stageInfo.taskMetrics.inputMetrics.recordsRead
-        }
-      }
-      s.sparkContext.addSparkListener(listener)
-      def shape(): org.apache.spark.sql.DataFrame = {
-        val o = graft.Tables.t(s, d, "orders").select(col("o_orderkey"),
-          col("o_custkey"), expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
-        val a = o.groupBy("o_custkey").agg(sum(col("cents")).as("cust_cents"),
-          count(lit(1)).as("n_orders"))
-        o.join(a, "o_custkey")
-      }
-      def run(tag: String): Unit = {
-        recs = 0; bytes = 0; read = 0
-        val t0 = System.nanoTime()
-        shape().write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500) // let the listener bus drain
-        println(f"[probe] $tag%-10s wall ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          f"shuffleRecs $recs%,12d shuffleBytes $bytes%,14d inputRecs $read%,12d")
-      }
-      graft.plans.RewriteSelfJoinAgg.register(s)
-      run("rule-on-warm"); run("rule-on")
-      s.experimental.extraOptimizations = s.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.RewriteSelfJoinAgg)
-      run("rule-off-warm"); run("rule-off")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_P03")) {
-      val s = spark
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      def t[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[probe] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-        r
-      }
-      val hint = sys.env.getOrElse("PROBE_P03_JOINHINT", "")
-      val li = graft.Tables.t(s, d, "lineitem").select("l_orderkey", "l_suppkey")
-      val od0 = graft.Tables.t(s, d, "orders").select("o_orderkey", "o_custkey")
-      val od = if (hint.nonEmpty) od0.hint(hint) else od0
-      val raw = li.join(od, col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-        .distinct()
-      val edgesRaw = raw.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(raw.select(col("s").as("src"), col("c").as("dst")))
-      val n = s.sparkContext.defaultParallelism
-      val edges = t("edges materialize") {
-        graft.Stage.materializeBy(s, edgesRaw, n, Seq(col("src")), "pe")
-      }
-      println(s"[probe] edges rows = ${t("edges count")(edges.count())}")
-      val deg = t("deg") { graft.Stage.materializeBy(s,
-        edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .withColumnRenamed("src", "v"), n, Seq(col("v")), "pd") }
-      var ranks = t("ranks0") { graft.Stage.materializeBy(s,
-        deg.select(col("v"), lit(100000000L).as("rk"), col("deg")), n, Seq(col("v")), "pr0") }
-      for (i <- 1 to 3) {
-        ranks = t(s"round $i") { graft.Stage.materializeKeeping(s,
-          edges.join(ranks.hint("shuffle_hash"), col("src") === col("v"))
-            .groupBy(col("dst"))
-            .agg((lit(15000000L) + sum(expr("(34 * rk + 20 * deg) div (40 * deg)"))).as("rk"))
-            .withColumnRenamed("dst", "v")
-            .join(deg.hint("shuffle_hash"), "v"), s"pr$i") }
-      }
-      t("top50") { ranks.select(col("v"), (col("rk").cast("double") / 100000000L).as("r"))
-        .orderBy(col("r").desc, col("v")).limit(50).collect() }
       spark.stop(); sys.exit(0)
     }
     if (sys.env.contains("PROBE_P04")) {
@@ -919,352 +432,6 @@ object Probe {
       }
       graft.Stage.release()
       spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_SUMS")) {
-    val li = graft.Tables.t(spark, d, "lineitem")
-    val q = col("l_quantity"); val x = col("l_discount"); val y = col("l_tax")
-    for (_ <- 1 to 2) {
-      time("count_only") {
-        li.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-      }
-      time("double_sums_7") {
-        li.groupBy("l_returnflag").agg(count(lit(1)).as("n"),
-          sum(q).as("a"), sum(q * q).as("b"), sum(x).as("c"), sum(y).as("dd"),
-          sum(x * x).as("e"), sum(y * y).as("f"), sum(x * y).as("g"))
-      }
-      time("dsum_decimal28_7") {
-        li.groupBy("l_returnflag").agg(count(lit(1)).as("n"),
-          graft.Det.dsum(q).as("a"), graft.Det.dsum(q * q).as("b"),
-          graft.Det.dsum(x).as("c"), graft.Det.dsum(y).as("dd"),
-          graft.Det.dsum(x * x).as("e"), graft.Det.dsum(y * y).as("f"),
-          graft.Det.dsum(x * y).as("g"))
-      }
-      time("dsum128_7") {
-        li.groupBy("l_returnflag").agg(count(lit(1)).as("n"),
-          graft.Det.dsum128(q).as("a"), graft.Det.dsum128(q * q).as("b"),
-          graft.Det.dsum128(x).as("c"), graft.Det.dsum128(y).as("dd"),
-          graft.Det.dsum128(x * x).as("e"), graft.Det.dsum128(y * y).as("f"),
-          graft.Det.dsum128(x * y).as("g"))
-      }
-    }
-    }
-    if (sys.env.contains("PROBE_Q43")) {
-      // decompose the sessionize pipeline: window passes alone, + agg,
-      // + presentation sort (the full entry)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val gapUs = unix_micros(col("ts")) -
-        unix_micros(lag(col("ts"), 1).over(w))
-      def sess = graft.Tables.t(spark, d, "events")
-        .withColumn("is_new",
-          when(gapUs.isNull || gapUs > lit(28800000000L), 1).otherwise(0))
-        .withColumn("session_id", sum(col("is_new"))
-          .over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      def agg = sess.groupBy("user_id", "session_id")
-        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"), graft.Det.dsum(col("value")).as("total_value"))
-      val phases = sys.env("PROBE_Q43")
-      def on(p: String) = phases == "1" || phases.contains(p)
-      if (on("scan")) time("q43_scan_only")(graft.Tables.t(spark, d, "events")
-        .select("user_id", "event_id", "ts", "value"))
-      if (on("windows")) time("q43_windows")(sess)
-      if (on("agg")) time("q43_windows_agg")(agg)
-      if (on("agg128")) time("q43_agg128")(sess.groupBy("user_id", "session_id")
-        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"), graft.Det.dsum128(col("value")).as("total_value")))
-      if (on("full")) time("q43_full")(agg.orderBy("user_id", "session_id"))
-    }
-    if (sys.env.contains("PROBE_T06")) {
-      // token counting: array-materializing size(split()) vs the native
-      // zero-allocation byte scan (CountTokens) — same count by the same
-      // split semantics (spec-pinned), different per-row cost.
-      val base = graft.Tables.t(spark, d, "documents")
-      def splitForm = base.select(size(split(col("text"), " ")).cast("long").as("n"))
-        .agg(sum(col("n")).as("total"))
-      def nativeForm = base.select(org.apache.spark.sql.GraftPlanShim.column(
-          graft.functions.CountTokens(
-            org.apache.spark.sql.GraftPlanShim.expression(col("text")))).as("n"))
-        .agg(sum(col("n")).as("total"))
-      time("t06_split_size_warm")(splitForm)
-      time("t06_split_size")(splitForm)
-      time("t06_native_count_warm")(nativeForm)
-      time("t06_native_count")(nativeForm)
-    }
-    if (sys.env.contains("PROBE_Q95")) {
-      // Top-k-through-join: the q95 shape with the rule OFF (stock plan
-      // — the ENTIRE fact table flows through the join, then TakeOrdered)
-      // vs ON (TakeOrdered below the join; the join probes k rows).
-      // Tracks join-input volume via shuffle/output records.
-      val s = spark
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-      s.sparkContext.addSparkListener(listener)
-      def shape = {
-        val li = graft.Tables.t(s, d, "lineitem")
-        val dim = graft.Tables.t(s, d, "orders")
-        li.join(dim, col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice"), col("o_orderpriority"))
-          .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-          .limit(20)
-      }
-      def run(tag: String): Unit = {
-        recs = 0
-        val t0 = System.nanoTime()
-        shape.write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500)
-        println(f"[probe] $tag%-18s wall ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          f"shuffleRecs $recs%,12d")
-      }
-      run("q95_rule_off_warm"); run("q95_rule_off")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteTopKThroughJoin.register(s)
-      run("q95_rule_on_warm"); run("q95_rule_on")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_V23")) {
-      // Filtered ANN beyond the broadcast cliff: threshold forced to 1 KB
-      // so the allow-set semi join must shuffle (the sf100 regime, where
-      // the allow set is fact-proportional). v21 semi-joins the vector
-      // rows (the exchange carries ~520 B/row of embeddings); v23 scores
-      // first behind a repartition barrier so the exchange carries
-      // (8 B id, 8 B score). Shuffle bytes written is the story.
-      val s = spark
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "1KB")
-      @volatile var bytes = 0L
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-        }
-      }
-      s.sparkContext.addSparkListener(listener)
-      def run(tag: String, name: String): Unit = {
-        val q = graft.SparkEntry.catalog.find(_.name == name).get
-        bytes = 0; recs = 0
-        val t0 = System.nanoTime()
-        q.fn(s, d).write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500)
-        println(f"[probe] $tag%-22s wall ${(System.nanoTime() - t0) / 1e9}%7.2f s " +
-          f"shuffle ${bytes / 1e6}%9.1f MB / $recs%,12d recs")
-      }
-      run("v21_fat_semi_warm", "v21_filtered_ann"); run("v21_fat_semi", "v21_filtered_ann")
-      run("v23_slim_semi_warm", "v23_filtered_ann_slim"); run("v23_slim_semi", "v23_filtered_ann_slim")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q100")) {
-      // NOT IN at the beyond-broadcast cliff: threshold forced to 1 KB
-      // to show the NAAJ build is FORCED, not chosen — rule OFF stays
-      // BroadcastHashJoin(..., isNullAware=true) regardless, because no
-      // shuffle strategy implements null-aware semantics; rule ON is
-      // free to plan a shuffle-capable SortMergeJoin anti.
-      val s = spark
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "1KB")
-      def shape = graft.Tables.t(s, d, "events")
-        .join(graft.Tables.t(s, d, "customer")
-            .filter(col("c_mktsegment") === "BUILDING").select("c_custkey"),
-          col("user_id") === col("c_custkey") ||
-            isnull(col("user_id") === col("c_custkey")),
-          "left_anti")
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-        .orderBy("event_type")
-      def run(tag: String): Unit = {
-        val ex = shape.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-        val joinNode = ex.linesIterator.map(_.trim)
-          .find(l => l.contains("Join") || l.contains("join"))
-          .getOrElse("?").take(90)
-        val t0 = System.nanoTime()
-        shape.write.format("noop").mode("overwrite").save()
-        println(f"[probe] $tag%-18s wall ${(System.nanoTime() - t0) / 1e9}%7.2f s  $joinNode")
-      }
-      run("q100_rule_off_warm"); run("q100_rule_off")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteNotInToAnti.register(s)
-      run("q100_rule_on_warm"); run("q100_rule_on")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q99")) {
-      // License capstone: all three rules off (stock: semi join +
-      // dedup exchange + fact-sized join) vs on (one TakeOrdered scan
-      // + 20-row join).
-      val s = spark
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-      s.sparkContext.addSparkListener(listener)
-      def shape = graft.Tables.t(s, d, "events")
-        .join(graft.Tables.t(s, d, "customer").select("c_custkey"),
-          col("user_id") === col("c_custkey"), "left_semi")
-        .join(graft.Tables.t(s, d, "customer"), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("event_type"), col("value"), col("c_mktsegment"))
-        .distinct()
-        .orderBy(col("value").desc, col("event_id"))
-        .limit(20)
-      def run(tag: String): Unit = {
-        recs = 0
-        val t0 = System.nanoTime()
-        shape.write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500)
-        println(f"[probe] $tag%-18s wall ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          f"shuffleRecs $recs%,12d")
-      }
-      run("q99_rules_off_warm"); run("q99_rules_off")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteJoinElimination.register(s)
-      graft.plans.RewriteTopKThroughJoin.register(s)
-      graft.plans.RewriteDistinctByKey.register(s)
-      run("q99_rules_on_warm"); run("q99_rules_on")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q97")) {
-      // Semi-join elimination: the q97 IN-subquery guard with the rule
-      // OFF (stock executes the full semi join) vs ON (deleted).
-      val s = spark
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-      s.sparkContext.addSparkListener(listener)
-      def shape = graft.Tables.t(s, d, "lineitem")
-        .join(graft.Tables.t(s, d, "orders").select("o_orderkey"),
-          col("l_orderkey") === col("o_orderkey"), "left_semi")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), graft.Det.dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy("l_returnflag")
-      def run(tag: String): Unit = {
-        recs = 0
-        val t0 = System.nanoTime()
-        shape.write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500)
-        println(f"[probe] $tag%-18s wall ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          f"shuffleRecs $recs%,12d")
-      }
-      run("q97_rule_off_warm"); run("q97_rule_off")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteJoinElimination.register(s)
-      run("q97_rule_on_warm"); run("q97_rule_on")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q96")) {
-      // Distinct elimination: the q96 shape with the rule OFF (stock —
-      // the dedup Aggregate full-width-shuffles every row) vs ON (the
-      // DISTINCT is deleted; the query is one TakeOrdered scan).
-      val s = spark
-      @volatile var recs = 0L
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          recs += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-      }
-      s.sparkContext.addSparkListener(listener)
-      def shape = graft.Tables.t(s, d, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-        .distinct()
-        .orderBy(col("value").desc, col("event_id"))
-        .limit(20)
-      def run(tag: String): Unit = {
-        recs = 0
-        val t0 = System.nanoTime()
-        shape.write.format("noop").mode("overwrite").save()
-        Thread.sleep(1500)
-        println(f"[probe] $tag%-18s wall ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          f"shuffleRecs $recs%,12d")
-      }
-      run("q96_rule_off_warm"); run("q96_rule_off")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteDistinctByKey.register(s)
-      run("q96_rule_on_warm"); run("q96_rule_on")
-      spark.stop(); sys.exit(0)
-    }
-    if (sys.env.contains("PROBE_Q94")) {
-      // RELY join elimination: the q94 shape with the rule OFF (stock
-      // plan — fact shuffles/broadcast-probes against the orders build)
-      // vs ON (join deleted, one scan). Also prints scan counts.
-      def shape = {
-        val li = graft.Tables.t(spark, d, "lineitem")
-        val dim = graft.Tables.t(spark, d, "orders")
-        li.join(dim, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(count(lit(1)).as("n"), graft.Det.dsum(col("l_quantity")).as("sum_qty"))
-          .orderBy("l_returnflag", "l_linestatus")
-      }
-      def scans(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
-      }.size
-      time("q94_rule_off_warm")(shape)
-      time("q94_rule_off")(shape)
-      println(s"[probe] q94_rule_off scans=${scans(shape)}")
-      graft.plans.TableConstraints.registerStarSchema()
-      graft.plans.RewriteJoinElimination.register(spark)
-      time("q94_rule_on_warm")(shape)
-      time("q94_rule_on")(shape)
-      println(s"[probe] q94_rule_on  scans=${scans(shape)}")
-    }
-    if (sys.env.contains("PROBE_I26")) {
-      // decompose i26: where do the sf10 seconds go — the bucketed
-      // sorted CSV writes, or the sorted-scan join itself?
-      def timeU(tag: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime()
-        f
-        println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      }
-      val dir = graft.TempDirs.newTempDir("probe_i26_")
-      val orders = graft.Tables.t(spark, d, "orders")
-        .select(col("o_custkey").as("k"), col("o_totalprice").as("num"),
-          lit("-").as("tag"))
-      val cust = graft.Tables.t(spark, d, "customer")
-        .select(col("c_custkey").as("k"), col("c_acctbal").as("num"),
-          col("c_mktsegment").as("tag"))
-      timeU("plain_write_orders")(
-        orders.write.option("header", "false").csv(s"$dir/plain_o"))
-      def bucketed(df: DataFrame, sub: String): Unit =
-        df.withColumn("bucket", pmod(col("k"), lit(8)).cast("int"))
-          .repartitionByRange(spark.sparkContext.defaultParallelism,
-            col("bucket"), col("k"))
-          .sortWithinPartitions("bucket", "k")
-          .write.partitionBy("bucket").option("header", "false")
-          .csv(s"$dir/$sub")
-      timeU("bucketed_write_orders")(bucketed(orders, "orders"))
-      timeU("bucketed_write_customer")(bucketed(cust, "customer"))
-      def keyed(sub: String) = spark.read
-        .format("graft.sources.KeyedSourceProvider")
-        .option("path", s"$dir/$sub").option("buckets", "8")
-        .option("ordered", "true").load()
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      timeU("scan_orders_bucketed")(
-        keyed("orders").write.format("noop").mode("overwrite").save())
-      // same rows through the unbucketed residue layout: every partition
-      // parses the full corpus and keeps its eighth
-      timeU("scan_orders_residue")(
-        spark.read.format("graft.sources.KeyedSourceProvider")
-          .option("path", s"$dir/plain_o").option("buckets", "8").load()
-          .write.format("noop").mode("overwrite").save())
-      time("sorted_join_agg")(
-        keyed("orders").select(col("k"), col("num").as("o_num"), col("bucket"))
-          .join(keyed("customer").select(
-            col("k"), col("num").as("c_num"), col("tag"), col("bucket")),
-            Seq("bucket", "k"))
-          .groupBy("tag")
-          .agg(count(lit(1)).as("n"),
-            graft.Det.dsum(col("o_num")).as("total_price"),
-            graft.Det.dsum(col("c_num")).as("total_bal"))
-          .orderBy("tag"))
     }
     spark.stop()
   }

@@ -17,7 +17,7 @@ class PlanLintSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = SparkTestBase.flattenPlan(p)
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = GraftSession.flattenPlan(p)
 
   /** Entries allowed an empty-partition window because the windowed
     * input is BOUNDED BY CONSTRUCTION, not data-sized — the lint exists

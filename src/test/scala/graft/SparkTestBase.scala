@@ -1,29 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkPlan
 
 /** One shared local session for the whole forked test JVM (a per-suite
-  * session would pay ~5 s of context startup each). Config mirrors the
-  * Verify/Bench harness: UTC, small shuffle width, nanos-as-long for the
-  * events table. */
+  * session would pay ~5 s of context startup each), built by the same
+  * factory as Verify/Bench, at 4 cores. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; a 137-query
-      // catalog compiles far more distinct codegen classes than that, so
-      // the cache thrashes and queries pay Janino recompilation on every
-      // pass (measured on the dedup subset: d05 3.5 -> 2.1 s, d04/d07
-      // -25% with the cache sized to hold the whole catalog).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // keep ContextCleaner ahead of multi-suite shuffle/broadcast
-      // garbage (see Bench.scala for the sf10 measurement)
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .getOrCreate()
+    val s = GraftSession(cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     // Hard-OFF the adaptive-execution logger. NOTE (r15): this is NOT
     // the q70 deadlock fix — the r14 verdict reproduced the hang WITH
@@ -39,24 +26,19 @@ object SparkTestBase {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.adaptive",
       org.apache.logging.log4j.Level.OFF)
-    graft.plans.GraftEngine.install(s)
     s
   }
 
   /** Smoke-tier data — correctness semantics don't need volume. */
   val sfDir = "/root/testdata/sf0.001"
 
-  /** AQE wrappers (AdaptiveSparkPlanExec / QueryStageExec) are LEAF
-    * nodes hiding the real tree — unwrap them wherever they appear,
-    * including the root. Includes subqueries. One copy here; specs had
-    * grown four diverging clones of this. */
-  def flattenPlan(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      flattenPlan(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      flattenPlan(q.plan)
-    case other => other +: (other.children ++ other.subqueries).flatMap(flattenPlan)
+  /** Runs `body` with `rules` taken out of the shared session's optimizer
+    * list (restored on exit): the stock-Spark side of a rule's A/B. */
+  def withoutRules[T](rules: Rule[LogicalPlan]*)(body: => T): T = {
+    val exp = spark.experimental
+    val saved = exp.extraOptimizations
+    exp.extraOptimizations = saved.filterNot(rules.contains)
+    try body finally exp.extraOptimizations = saved
   }
 
   /** The listener bus delivers asynchronously; poll a counter until it
@@ -91,8 +73,7 @@ object SparkTestBase {
     * shows only a LogicalRDD scan. `expectMin` bounds the async wait:
     * we poll until at least that many executions arrived (10 s cap),
     * then drain until the bus goes quiet. */
-  def executedPlans(expectMin: Int)(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  def executedPlans(expectMin: Int)(body: => Unit): Seq[SparkPlan] = {
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -112,6 +93,6 @@ object SparkTestBase {
       drainListener(() => captured.size.toLong)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    captured.asScala.toSeq.flatMap(qe => flattenPlan(qe.executedPlan))
+    captured.asScala.toSeq.flatMap(qe => GraftSession.flattenPlan(qe.executedPlan))
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{SparkTestBase, Tables}
+import graft.{GraftSession, SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,5 +96,5 @@ class ContainmentSpec extends AnyFunSuite {
   }
 
   private def flatten(p: org.apache.spark.sql.execution.SparkPlan) =
-    SparkTestBase.flattenPlan(p)
+    GraftSession.flattenPlan(p)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft_argmin's contract: equal to "first value ordered by (ord ASC,
@@ -40,7 +40,7 @@ class ArgMinLongSpec extends AnyFunSuite {
     val got = agg.collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(got(1L) == Some(10L)) // (1.0, null) ignored; (2.0, 10) wins
     assert(got(2L) == None)
-    val plans = SparkTestBase.flattenPlan(agg.queryExecution.executedPlan)
+    val plans = GraftSession.flattenPlan(agg.queryExecution.executedPlan)
     assert(plans.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.aggregate.HashAggregateExec]),
       "argmin must be HashAggregate-eligible (flat buffer), not SortAggregate")

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +16,7 @@ class AggPushdownSpec extends AnyFunSuite {
     val (df, rows) = IngestQueries.pushedFooterAggPlan(s, d)
 
     // 1. the executed plan's scan advertises the pushed aggregation
-    val scans = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val scans = GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .collect { case b: BatchScanExec => b }
     assert(scans.nonEmpty, s"expected a DSv2 BatchScan:\n${df.queryExecution}")
     val desc = scans.map(_.scan.description()).mkString("\n")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,7 +31,7 @@ class BfsSpec extends AnyFunSuite {
     } finally s.listenerManager.unregister(listener)
 
     import scala.jdk.CollectionConverters._
-    assert(!plans.asScala.toSeq.flatMap(SparkTestBase.flattenPlan).exists(
+    assert(!plans.asScala.toSeq.flatMap(GraftSession.flattenPlan).exists(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
       "BFS loop broadcast something — frontier must flow as a co-partitioned shuffle")
 

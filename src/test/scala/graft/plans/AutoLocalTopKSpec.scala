@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{GraftSession, SparkEntry, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -18,7 +18,7 @@ class AutoLocalTopKSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = SparkTestBase.flattenPlan(p)
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = GraftSession.flattenPlan(p)
 
   private def hasTopK(df: DataFrame): Boolean = {
     df.collect() // finalize AQE

@@ -18,17 +18,10 @@ class BitmapDistinctSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteBitmapDistinct)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def fired(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("bitmap_construct_agg")
 
   test("bucket/bit decomposition is injective across the long domain") {
-    RewriteBitmapDistinct.register(s)
     import s.implicits._
     val vals = Seq(Long.MinValue + 1, -70000L, -32769L, -32768L, -1L, 0L,
       1L, 2L, 32767L, 32768L, 32769L, 70000L, Long.MaxValue - 1)
@@ -41,7 +34,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("grouped and global rewrites fire and match the rule-off plan") {
-    RewriteBitmapDistinct.register(s)
     def grouped(): DataFrame = graft.Tables.t(s, d, "orders")
       .groupBy("o_orderpriority")
       .agg(countDistinct(col("o_custkey")).as("n"))
@@ -50,14 +42,15 @@ class BitmapDistinctSpec extends AnyFunSuite {
       .agg(countDistinct(col("o_custkey")).as("n"))
     assert(fired(grouped()), "rule did not fire on the grouped shape")
     assert(fired(global()), "rule did not fire on the global shape")
-    val (gOn, gOff) = (grouped().collect(), withoutRule(grouped().collect()))
+    val (gOn, gOff) = (grouped().collect(),
+      SparkTestBase.withoutRules(RewriteBitmapDistinct)(grouped().collect()))
     assert(gOn.map(_.toSeq).toSeq == gOff.map(_.toSeq).toSeq)
-    val (aOn, aOff) = (global().collect(), withoutRule(global().collect()))
+    val (aOn, aOff) = (global().collect(),
+      SparkTestBase.withoutRules(RewriteBitmapDistinct)(global().collect()))
     assert(aOn.map(_.toSeq).toSeq == aOff.map(_.toSeq).toSeq)
   }
 
   test("null keys drop, negatives count, empty input yields zero") {
-    RewriteBitmapDistinct.register(s)
     import s.implicits._
     val df = Seq[java.lang.Long](-5L, -5L, null, 0L, 7L)
       .toDF("k").select(col("k").cast("long").as("k"))
@@ -69,7 +62,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("non-conforming shapes are untouched") {
-    RewriteBitmapDistinct.register(s)
     val t = graft.Tables.t(s, d, "orders")
     // extra aggregate alongside the distinct
     val mixed = t.groupBy("o_orderpriority")

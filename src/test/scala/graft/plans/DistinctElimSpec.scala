@@ -19,12 +19,6 @@ class DistinctElimSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteDistinctByKey)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def ev = graft.Tables.t(s, d, "events")
   private def orders = graft.Tables.t(s, d, "orders")
   private def customer = graft.Tables.t(s, d, "customer")
@@ -37,18 +31,13 @@ class DistinctElimSpec extends AnyFunSuite {
       case _ => false
     }
 
-  private def register(): Unit = {
-    TableConstraints.registerStarSchema()
-    RewriteDistinctByKey.register(s)
-  }
-
   test("covering distinct vanishes; stock keeps it; rows equal") {
-    register()
+    TableConstraints.registerStarSchema()
     def shape = ev.select(col("event_id"), col("event_type"), col("value"))
       .distinct()
       .orderBy(col("value").desc, col("event_id")).limit(20)
     assert(!hasDedup(shape), "covered DISTINCT was not eliminated")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteDistinctByKey) {
       val ndf = shape
       assert(hasDedup(ndf), "stock Spark eliminated a bare-scan DISTINCT?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -57,7 +46,7 @@ class DistinctElimSpec extends AnyFunSuite {
   }
 
   test("dropDuplicates spelling and a filtered child eliminate too") {
-    register()
+    TableConstraints.registerStarSchema()
     val dd = ev.filter(col("value") > 0)
       .dropDuplicates("event_id", "event_type")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
@@ -66,29 +55,31 @@ class DistinctElimSpec extends AnyFunSuite {
       case _: Deduplicate => true
       case _ => false
     }, "dropDuplicates over a unique-key filter child survived")
-    val off = withoutRule(dd.orderBy("event_type").collect().map(_.toSeq).toSeq)
+    val off = SparkTestBase.withoutRules(RewriteDistinctByKey) {
+      dd.orderBy("event_type").collect().map(_.toSeq).toSeq
+    }
     assert(dd.orderBy("event_type").collect().map(_.toSeq).toSeq == off)
   }
 
   test("license composes through a preserved FK join") {
-    register()
+    TableConstraints.registerStarSchema()
     val j = orders.join(customer, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("c_name")).distinct()
       .orderBy(col("o_orderkey")).limit(10)
     assert(!hasDedup(j), "distinct over a preserved FK join was not eliminated")
-    val off = withoutRule(j.collect().map(_.toSeq).toSeq)
+    val off = SparkTestBase.withoutRules(RewriteDistinctByKey)(j.collect().map(_.toSeq).toSeq)
     assert(j.collect().map(_.toSeq).toSeq == off)
   }
 
   test("group-by-key elimination: aggregates over the unique key degenerate") {
-    register()
+    TableConstraints.registerStarSchema()
     def shape = ev.groupBy(col("event_id"), col("event_type"))
       .agg(max(col("value")).as("max_v"), count(lit(1)).as("n"),
         avg(col("value")).as("avg_v"), sum(col("user_id")).as("su"),
         min(col("ts")).as("mt"), count(col("value")).as("nv"))
       .orderBy(col("max_v").desc, col("event_id")).limit(20)
     assert(!hasDedup(shape), "keyed group-by aggregate was not eliminated")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteDistinctByKey) {
       val ndf = shape
       assert(hasDedup(ndf), "stock Spark eliminated a bare-scan group-by?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -101,7 +92,7 @@ class DistinctElimSpec extends AnyFunSuite {
   }
 
   test("narrowness: uncovered keys, duplicating child, unlicensed join, undeclared table") {
-    register()
+    TableConstraints.registerStarSchema()
     // unique key not covered — a real dedup, must stay
     val uncovered = ev.select(col("event_type"), col("value")).distinct()
     assert(hasDedup(uncovered), "eliminated a real DISTINCT")

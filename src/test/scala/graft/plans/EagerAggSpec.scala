@@ -67,15 +67,13 @@ class EagerAggSpec extends AnyFunSuite {
 
   test("rule-off rows match rule-on rows") {
     val on = naive().collect().map(_.toSeq)
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteEagerAgg)
-    try {
+    SparkTestBase.withoutRules(RewriteEagerAgg) {
       val offDf = naive()
       assert(!hasPreAggBelowJoin(offDf.queryExecution.optimizedPlan),
         "rule removed but plan still pre-aggregates")
       val off = offDf.collect().map(_.toSeq)
       assert(on.toSeq == off.toSeq, "eager aggregation changed the answer")
-    } finally s.experimental.extraOptimizations = saved
+    }
   }
 
   test("the rewrite reduces shuffled records in its regime") {

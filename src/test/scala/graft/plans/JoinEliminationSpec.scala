@@ -24,12 +24,6 @@ class JoinEliminationSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteJoinElimination)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def joins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 
@@ -43,14 +37,13 @@ class JoinEliminationSpec extends AnyFunSuite {
       .orderBy("l_returnflag", "l_linestatus")
 
   test("inner FK channel: join gone, one scan; stock Spark keeps it; rows equal") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     val df = q94()
     assert(joins(df) == 0, "rule did not eliminate the dead FK join")
     val scans = df.queryExecution.optimizedPlan
       .collect { case l: LogicalRelation => l }
     assert(scans.size == 1, s"expected one scan, got ${scans.size}")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteJoinElimination) {
       val ndf = q94()
       assert(joins(ndf) == 1, "stock Spark eliminated an inner join?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -59,13 +52,12 @@ class JoinEliminationSpec extends AnyFunSuite {
   }
 
   test("outer PK channel: bare dim scan (distinctKeys empty) eliminated") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     def q(): DataFrame =
       li.join(orders, col("l_orderkey") === col("o_orderkey"), "left_outer")
         .groupBy("l_returnflag").agg(count(lit(1)).as("n")).orderBy("l_returnflag")
     assert(joins(q()) == 0, "PK-licensed outer elimination did not fire")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteJoinElimination) {
       val ndf = q()
       // the bare scan constructs no distinctKeys, so Spark keeps the join
       assert(joins(ndf) == 1, "EliminateOuterJoin fired on a bare scan?!")
@@ -75,7 +67,6 @@ class JoinEliminationSpec extends AnyFunSuite {
   }
 
   test("narrowness: filtered dim, wrong pair, referenced dim, undeclared table") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     // INNER with a dim-side filter restricts the fact rows — must survive
     val filtered = li.join(orders.filter(col("o_orderkey") % 2 === 0),
@@ -101,7 +92,6 @@ class JoinEliminationSpec extends AnyFunSuite {
   }
 
   test("value-preservation trace: a union-sourced fact key refuses the inner channel") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     import s.implicits._
     // A Union reuses its FIRST child's exprIds but carries BOTH children's

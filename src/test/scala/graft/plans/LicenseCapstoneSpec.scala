@@ -18,16 +18,6 @@ class LicenseCapstoneSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private val rules = Seq(RewriteJoinElimination, RewriteTopKThroughJoin,
-    RewriteDistinctByKey)
-
-  private def withoutRules[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations =
-      saved.filterNot(r => rules.exists(_ == r))
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def shape: DataFrame =
     graft.Tables.t(s, d, "events")
       .join(graft.Tables.t(s, d, "customer").select("c_custkey"),
@@ -40,9 +30,6 @@ class LicenseCapstoneSpec extends AnyFunSuite {
       .limit(20)
 
   test("all four channels fire; stock keeps all three operators; rows equal") {
-    RewriteJoinElimination.register(s)
-    RewriteTopKThroughJoin.register(s)
-    RewriteDistinctByKey.register(s)
     TableConstraints.registerStarSchema()
     val p = shape.queryExecution.optimizedPlan
     val joins = p.collect { case j: Join => j }
@@ -52,7 +39,8 @@ class LicenseCapstoneSpec extends AnyFunSuite {
     assert(joins.head.exists { case _: GlobalLimit => true; case _ => false },
       "top-k was not pushed below the surviving FK join")
     val on = shape.collect().map(_.toSeq).toSeq
-    val off = withoutRules {
+    val off = SparkTestBase.withoutRules(RewriteJoinElimination,
+        RewriteTopKThroughJoin, RewriteDistinctByKey) {
       val np = shape.queryExecution.optimizedPlan
       assert(np.collect { case j: Join => j }.size == 2, "stock lost a join?!")
       assert(np.exists { case _: Aggregate => true; case _ => false },

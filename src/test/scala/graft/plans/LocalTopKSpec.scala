@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{SparkTestBase, Tables}
+import graft.{GraftSession, SparkTestBase, Tables}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.expressions.Window
@@ -14,7 +14,7 @@ class LocalTopKSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = "/root/testdata/sf0.01"
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = SparkTestBase.flattenPlan(p)
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = GraftSession.flattenPlan(p)
 
   private def base = Tables.t(s, d, "orders")
     .select("o_orderpriority", "o_orderkey", "o_totalprice")

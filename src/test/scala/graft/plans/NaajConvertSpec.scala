@@ -20,12 +20,6 @@ class NaajConvertSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteNotInToAnti)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def nullAwareAnti(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists {
       case j @ Join(_, _, LeftAnti, Some(cond), _) =>
@@ -46,10 +40,9 @@ class NaajConvertSpec extends AnyFunSuite {
       isnull(col("user_id") === col("c_custkey")))
 
   test("declared non-null NOT IN converts to plain anti; stock keeps NAAJ; rows equal") {
-    RewriteNotInToAnti.register(s)
     TableConstraints.registerStarSchema()
     assert(!nullAwareAnti(shape), "null-aware condition was not converted")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteNotInToAnti) {
       val ndf = shape
       assert(nullAwareAnti(ndf), "stock Spark dropped the null-aware disjunct?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -58,7 +51,6 @@ class NaajConvertSpec extends AnyFunSuite {
   }
 
   test("q58's nullable derived key refuses; undeclared pair refuses") {
-    RewriteNotInToAnti.register(s)
     TableConstraints.registerStarSchema()
     graft.Tables.t(s, d, "customer").createOrReplaceTempView("customer")
     graft.Tables.t(s, d, "orders").createOrReplaceTempView("orders")

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Or
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
@@ -19,12 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class OrExpansionSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteOrExpansion)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def expanded(df: DataFrame): Boolean = {
     val p = df.queryExecution.optimizedPlan
     val hasUnion = p.collectFirst { case u: Union => u }.isDefined
@@ -35,7 +29,7 @@ class OrExpansionSpec extends AnyFunSuite {
   }
 
   private def noPairEnumeration(df: DataFrame): Boolean =
-    SparkTestBase.flattenPlan(df.queryExecution.executedPlan).forall {
+    GraftSession.flattenPlan(df.queryExecution.executedPlan).forall {
       case _: BroadcastNestedLoopJoinExec => false
       case _: CartesianProductExec => false
       case _ => true
@@ -59,17 +53,16 @@ class OrExpansionSpec extends AnyFunSuite {
   }
 
   test("disjunctive join expands to a union of equi joins") {
-    RewriteOrExpansion.register(s)
     val (_, joined) = pairs()
     assert(expanded(joined), "rule did not fire on the OR-join shape")
     assert(noPairEnumeration(joined), "physical plan still enumerates pairs")
   }
 
   test("on/off parity: null keys drop, both-match pairs count once") {
-    RewriteOrExpansion.register(s)
     val (_, joined) = pairs()
     val on = joined.collect().map(_.toSeq).toSeq
-    val off = withoutRule(pairs()._2.collect().map(_.toSeq).toSeq)
+    val off =
+      SparkTestBase.withoutRules(RewriteOrExpansion)(pairs()._2.collect().map(_.toSeq).toSeq)
     assert(on == off, s"rule-on $on differs from rule-off $off")
     // (4,5) matches both disjuncts — exactly once in the output
     assert(on.count(_ == Seq(4L, 5L)) == 1)
@@ -84,7 +77,6 @@ class OrExpansionSpec extends AnyFunSuite {
   }
 
   test("non-conforming shapes are untouched") {
-    RewriteOrExpansion.register(s)
     import s.implicits._
     val t = Seq((1L, "a", "x"), (2L, "b", "y")).toDF("id", "k1", "k2")
     val threeWay = t.as("a").join(t.as("b"),

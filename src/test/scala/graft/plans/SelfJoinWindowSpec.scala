@@ -21,12 +21,6 @@ class SelfJoinWindowSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteSelfJoinAgg)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def noBroadcast[T](body: => T): T = {
     val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -51,7 +45,6 @@ class SelfJoinWindowSpec extends AnyFunSuite {
   }
 
   test("q86 shape: window planted, join gone, base scanned once") {
-    RewriteSelfJoinAgg.register(s)
     noBroadcast {
       val df = naiveOrders()
       assert(windowPlanted(df), "rule did not fire on the self-join-agg shape")
@@ -62,7 +55,6 @@ class SelfJoinWindowSpec extends AnyFunSuite {
   }
 
   test("on/off parity, including null keys and the avg path") {
-    RewriteSelfJoinAgg.register(s)
     import s.implicits._
     val base = Seq[(Option[Long], Long)](
       (Some(1L), 10L), (Some(1L), 32L), (Some(2L), 7L), (None, 5L),
@@ -76,7 +68,7 @@ class SelfJoinWindowSpec extends AnyFunSuite {
     noBroadcast {
       assert(windowPlanted(naive()), "rule did not fire on the local relation")
       val on = naive().collect().map(_.toSeq).toSeq
-      val off = withoutRule(naive().collect().map(_.toSeq).toSeq)
+      val off = SparkTestBase.withoutRules(RewriteSelfJoinAgg)(naive().collect().map(_.toSeq).toSeq)
       assert(on == off, "rule-on rows differ from rule-off rows")
       // null keys must be gone on both paths
       assert(!on.exists(_.head == null))
@@ -84,14 +76,12 @@ class SelfJoinWindowSpec extends AnyFunSuite {
   }
 
   test("cost guard: broadcast regime keeps the naive join") {
-    RewriteSelfJoinAgg.register(s)
     // default threshold (10 MB) — sf0.01 orders aggregates well below it
     val df = naiveOrders()
     assert(!windowPlanted(df), "rule fired inside the broadcast regime")
   }
 
   test("non-conforming shapes are untouched") {
-    RewriteSelfJoinAgg.register(s)
     noBroadcast {
       val o = graft.Tables.t(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

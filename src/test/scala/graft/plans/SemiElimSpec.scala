@@ -24,12 +24,6 @@ class SemiElimSpec extends AnyFunSuite {
   private def joins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteJoinElimination)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def shape: DataFrame =
     li.join(orders.select("o_orderkey"),
         col("l_orderkey") === col("o_orderkey"), "left_semi")
@@ -37,10 +31,9 @@ class SemiElimSpec extends AnyFunSuite {
       .orderBy("l_returnflag")
 
   test("FK semi join eliminated; stock keeps it; rows equal") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     assert(joins(shape) == 0, "FK semi join was not eliminated")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteJoinElimination) {
       val ndf = shape
       assert(joins(ndf) == 1, "stock Spark eliminated a semi join?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -49,7 +42,6 @@ class SemiElimSpec extends AnyFunSuite {
   }
 
   test("narrowness: filtered dim and non-FK pair survive") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     val filtered = li.join(
         orders.filter(col("o_orderkey") % 2 === 0).select("o_orderkey"),
@@ -63,7 +55,6 @@ class SemiElimSpec extends AnyFunSuite {
   }
 
   test("anti-join firewall: the audit probe is never rewritten") {
-    RewriteJoinElimination.register(s)
     TableConstraints.registerStarSchema()
     val audit = li.join(orders.select("o_orderkey"),
         col("l_orderkey") === col("o_orderkey"), "left_anti")

@@ -18,12 +18,6 @@ class TopKJoinSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def withoutRule[T](body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved.filterNot(_ == RewriteTopKThroughJoin)
-    try body finally s.experimental.extraOptimizations = saved
-  }
-
   private def li = graft.Tables.t(s, d, "lineitem")
   private def orders = graft.Tables.t(s, d, "orders")
   private def ev = graft.Tables.t(s, d, "events")
@@ -42,11 +36,10 @@ class TopKJoinSpec extends AnyFunSuite {
       .limit(20)
 
   test("inner FK shape: top-k pushed below the join; stock keeps it; rows equal") {
-    RewriteTopKThroughJoin.register(s)
     TableConstraints.registerStarSchema()
     val df = q95("inner")
     assert(limitUnderJoin(df), "top-k was not pushed below the licensed join")
-    val off = withoutRule {
+    val off = SparkTestBase.withoutRules(RewriteTopKThroughJoin) {
       val ndf = q95("inner")
       assert(!limitUnderJoin(ndf), "stock Spark pushed a sorted limit?!")
       ndf.collect().map(_.toSeq).toSeq
@@ -55,16 +48,16 @@ class TopKJoinSpec extends AnyFunSuite {
   }
 
   test("left-outer PK license pushes too, rows equal") {
-    RewriteTopKThroughJoin.register(s)
     TableConstraints.registerStarSchema()
     val df = q95("left_outer")
     assert(limitUnderJoin(df), "left-outer push did not fire")
-    val off = withoutRule(q95("left_outer").collect().map(_.toSeq).toSeq)
+    val off = SparkTestBase.withoutRules(RewriteTopKThroughJoin) {
+      q95("left_outer").collect().map(_.toSeq).toSeq
+    }
     assert(df.collect().map(_.toSeq).toSeq == off)
   }
 
   test("narrowness: dim-side sort key and unlicensed join refuse") {
-    RewriteTopKThroughJoin.register(s)
     TableConstraints.registerStarSchema()
     // sort key from the dim side — the fact multiset license says nothing
     // about dim ordering; must not push

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +27,7 @@ class AqeCoalesceSpec extends AnyFunSuite {
       val df = graft.Tables.t(s, d, "nation")
         .groupBy("n_regionkey").agg(count(lit(1)).as("n"))
       df.collect() // finalize AQE
-      val reads = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+      val reads = GraftSession.flattenPlan(df.queryExecution.executedPlan)
         .collect { case r: AQEShuffleReadExec => r }
       assert(reads.nonEmpty, "no AQEShuffleRead in the executed plan")
       val parts = reads.map(_.partitionSpecs.length).min

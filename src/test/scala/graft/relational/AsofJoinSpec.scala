@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q29's union-window as-of join on constructed data where every edge is
@@ -41,7 +41,7 @@ class AsofJoinSpec extends AnyFunSuite {
     val native = nativeDf.collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(3)) null else r.getTimestamp(3))).toMap
     assert(native == got)
-    assert(SparkTestBase.flattenPlan(nativeDf.queryExecution.executedPlan)
+    assert(GraftSession.flattenPlan(nativeDf.queryExecution.executedPlan)
       .exists(_.isInstanceOf[graft.plans.AsofJoinExec]),
       "AsofJoinExec missing from q50's physical plan")
   }

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,7 +18,7 @@ class BinnedRangeJoinSpec extends AnyFunSuite {
   test("q60 plans an equi join — no nested loop, no cartesian product") {
     val df = RelationalQueries.q60BinnedRangeJoin.fn(s, d)
     df.collect() // finalize AQE
-    val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
     assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
       "binned range join still plans a BroadcastNestedLoopJoin")
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +21,7 @@ class CapstoneComposeSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
 
     // 1. DPP on the partitioned fact scan
-    val scans = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val scans = GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f }
     val fact = scans.find(_.metadata.get("Location").exists(_.contains("orders_by_year")))
       .getOrElse(fail("partitioned fact scan not found"))
@@ -45,7 +45,7 @@ class CapstoneComposeSpec extends AnyFunSuite {
       s"no eager pre-aggregate below a join:\n$opt")
 
     // 4. the rank window collapsed to the native top-k operator
-    assert(SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    assert(GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .exists(_.isInstanceOf[graft.plans.LocalTopKPerGroupExec]),
       "LocalTopKPerGroupExec missing — AutoLocalTopK did not fire")
 

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -13,7 +13,7 @@ class CompositeJoinSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = SparkTestBase.flattenPlan(p)
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = GraftSession.flattenPlan(p)
 
   test("q51 broadcasts both dims and pushes the region filter to the scan") {
     val df = RelationalQueries.q51TpchComposite.fn(s, d)

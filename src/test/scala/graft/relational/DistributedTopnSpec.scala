@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.{SparkTestBase, Tables}
+import graft.{GraftSession, SparkTestBase, Tables}
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
@@ -129,7 +129,7 @@ class DistributedTopnSpec extends AnyFunSuite {
         "sample-rank windows should be visible via the listener; this " +
         "assertion would be vacuous")
     def rowsInto(w: org.apache.spark.sql.execution.SparkPlan): Long =
-      SparkTestBase.flattenPlan(w).drop(1).iterator
+      GraftSession.flattenPlan(w).drop(1).iterator
         .flatMap(n => n.metrics.collectFirst {
           case (k, m) if k == "numOutputRows" ||
             k.toLowerCase.contains("records") => m.value

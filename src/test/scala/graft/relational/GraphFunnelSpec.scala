@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,7 +59,7 @@ class GraphFunnelSpec extends AnyFunSuite {
       r
     } finally s.listenerManager.unregister(listener)
 
-    val flat = plans.asScala.toSeq.map(SparkTestBase.flattenPlan)
+    val flat = plans.asScala.toSeq.map(GraftSession.flattenPlan)
     // beyond-broadcast: NO broadcast exchange in any round/setup execution
     assert(!flat.flatten.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
@@ -82,7 +82,7 @@ class GraphFunnelSpec extends AnyFunSuite {
     assert(roundJoins.size >= 3, s"expected >=3 rank-round joins, saw ${roundJoins.size}")
     roundJoins.foreach { j =>
       val edgesSide = if (j.left.output.map(_.name).contains("dst")) j.left else j.right
-      assert(!SparkTestBase.flattenPlan(edgesSide).exists(
+      assert(!GraftSession.flattenPlan(edgesSide).exists(
         _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]),
         s"edge side re-shuffled in a rank round:\n$j")
     }

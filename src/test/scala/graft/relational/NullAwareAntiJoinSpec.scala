@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ class NullAwareAntiJoinSpec extends AnyFunSuite {
   test("q58 plans a null-aware anti join and drops NULL-keyed rows") {
     val df = RelationalQueries.q58NotInNullAware.fn(s, d)
     val rows = df.collect()
-    val joins = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val joins = GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .collect { case b: BroadcastHashJoinExec => b }
     assert(joins.exists(_.isNullAwareAntiJoin),
       "NOT IN did not plan as a null-aware anti join")

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +17,7 @@ class RuntimePruningSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = SparkTestBase.flattenPlan(p)
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = GraftSession.flattenPlan(p)
 
   test("q54 plans dynamic partition pruning and reads only the dim-selected years") {
     val df = RelationalQueries.q54Dpp.fn(s, d)

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,7 @@ class ShuffleHashJoinSpec extends AnyFunSuite {
   test("q59 plans a shuffled hash join building on the hinted part side") {
     val df = RelationalQueries.q59ShuffleHashJoin.fn(s, d)
     df.collect() // finalize AQE
-    val joins = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val joins = GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .collect { case j: ShuffledHashJoinExec => j }
     assert(joins.nonEmpty, "no ShuffledHashJoinExec in the executed plan")
     // The hash table must be built on the (filtered, smaller) part side,

@@ -1,9 +1,7 @@
 package graft.relational
 
-import graft.{SparkTestBase, Tables}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.{GraftSession, SparkTestBase, Tables}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,12 +22,6 @@ class SkewJoinSpec extends AnyFunSuite {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None)    => s.conf.unset(k)
     }
-  }
-
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-    case q: QueryStageExec        => flatten(q.plan)
-    case other => other +: other.children.flatMap(flatten)
   }
 
   test("AQE marks and splits the skewed sort-merge join partition") {
@@ -59,7 +51,7 @@ class SkewJoinSpec extends AnyFunSuite {
       val joined = fact.join(dim.hint("merge"), "skew_key")
       joined.collect() // finalize THIS QueryExecution's adaptive plan
       val plan = joined.queryExecution.executedPlan
-      val smj = flatten(plan).filter(_.nodeName.startsWith("SortMergeJoin"))
+      val smj = GraftSession.flattenPlan(plan).filter(_.nodeName.startsWith("SortMergeJoin"))
       assert(smj.nonEmpty, s"expected a sort-merge join in:\n$plan")
       assert(smj.exists(_.toString.contains("skew=true")),
         s"OptimizeSkewedJoin never marked the join as skewed:\n$plan")

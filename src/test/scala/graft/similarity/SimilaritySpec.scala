@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite {
@@ -42,7 +42,7 @@ class SimilaritySpec extends AnyFunSuite {
     val rows = df.collect() // finalize AQE before inspecting the plan
     // the row_number()<=5 idiom must hand per-partition pruning to the
     // engine's LocalTopK (q48's rule, firing on a real workload)
-    assert(SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    assert(GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .exists(_.isInstanceOf[graft.plans.LocalTopKPerGroupExec]),
       "AutoLocalTopK did not fire on the batched-ANN window filter")
     // every probe answers (its own bucket always contains itself), in
@@ -110,7 +110,7 @@ class SimilaritySpec extends AnyFunSuite {
       val df = SimilarityQueries.v23FilteredAnnSlim.fn(s, d)
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == v21, "v23 must return exactly v21's answer")
-      val shuffled = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+      val shuffled = GraftSession.flattenPlan(df.queryExecution.executedPlan)
         .collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
             e.child.output }

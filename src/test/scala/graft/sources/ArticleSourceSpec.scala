@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ class ArticleSourceSpec extends AnyFunSuite {
 
   /** The planned partitions' page runs, read off the executed scan. */
   private def plannedRuns(df: DataFrame): Seq[Seq[Int]] =
-    SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .collectFirst { case b: BatchScanExec => b.inputPartitions }.get
       .map(_.asInstanceOf[ArticlePartition].pages.map(_._1))
 

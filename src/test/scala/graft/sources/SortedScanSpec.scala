@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -46,7 +46,7 @@ class SortedScanSpec extends AnyFunSuite {
 
   private def planCounts(df: DataFrame): (Int, Int, Int) = {
     df.collect() // finalize AQE
-    val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
     (nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
       nodes.count(_.isInstanceOf[SortExec]),
       nodes.count(_.isInstanceOf[SortMergeJoinExec]))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -38,7 +38,7 @@ class SpjSpec extends AnyFunSuite {
 
   private def shuffles(df: DataFrame): Int = {
     df.collect() // finalize AQE
-    SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    GraftSession.flattenPlan(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[ShuffleExchangeLike])
   }
 

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,7 +127,7 @@ class BpeTrainSpec extends AnyFunSuite {
   test("p14 plan: bucket table broadcasts; top-200 is a bounded heap, not a global sort") {
     val df = graft.pipeline.PipelineQueries.p14ImportanceSelect.fn(s, d)
     df.collect()
-    val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
     assert(nodes.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]))
     assert(!nodes.exists(

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.SparkTestBase
+import graft.{GraftSession, SparkTestBase}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,7 +43,7 @@ class CurationOpsSpec extends AnyFunSuite {
   test("d16 plan: the hot set never appears in a row schema; no join in the broadcast path") {
     val df = graft.dedup.DedupQueries.d16LineDedup.fn(s, d)
     df.collect()
-    val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
     // the hot set lives OFF-ROW in a Spark broadcast: the rewrite plan has
     // NO join node at all, so no plan boundary can copy the set per row
     // (generation 2 of this entry materialized rows × 21 MB at sf10)
@@ -75,7 +75,7 @@ class CurationOpsSpec extends AnyFunSuite {
       val df = graft.dedup.DedupQueries.d16LineDedup.fn(s, d)
       assert(rowsOf(df) == broadcastPath,
         "anti-join path diverged from the broadcast path")
-      val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+      val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
       assert(nodes.exists {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
           j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
@@ -122,7 +122,7 @@ class CurationOpsSpec extends AnyFunSuite {
   test("t24 plan: two bucket-scoped windows, no corpus-wide global window") {
     val df = TextQueries.t24TokenBudgetSelect.fn(s, d)
     df.collect()
-    val nodes = SparkTestBase.flattenPlan(df.queryExecution.executedPlan)
+    val nodes = GraftSession.flattenPlan(df.queryExecution.executedPlan)
     val windows = nodes.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.size == 2)
